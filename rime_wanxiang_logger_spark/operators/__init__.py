@@ -1,448 +1,39 @@
 """Operator registry: the full SURVEY §2 inventory + LLM-pipeline
 extensions, as (query, oracle-SQL) pairs keyed by query name.
 
-Modules register themselves via their ``QUERIES`` / ``ORACLE`` dicts;
-this package concatenates them in inventory order. Queries without an
-oracle entry (genuinely non-SQL-expressible ops) get the driver's
-weaker rows-only check.
+Each module in ``_MODULES`` defines a ``QUERIES`` dict of
+``(spark, sf_dir) -> DataFrame`` functions and an ``ORACLE`` dict of
+DuckDB SQL. Invariants (tests/test_oracle_parity.py, tests/test_registry.py):
+query names are unique across modules, every query has an oracle, and
+both dicts iterate in ``_MODULES`` order.
 """
 
 from __future__ import annotations
 
-import hashlib as _hashlib
-import json as _json
 from collections.abc import Callable
-from pathlib import Path as _Path
 
 from pyspark.sql import DataFrame, SparkSession
 
-from . import aggregates, extensions, joins, misses, rime, scalars, scans, windows
-
-_MODULES = [scans, misses, aggregates, windows, scalars, joins, extensions, rime]
-
-# Optional modules land here as they are built (dedup, similarity,
-# textstats, multimodal) — appended in later milestones.
-try:  # pragma: no cover
-    from . import dedup
-
-    _MODULES.append(dedup)
-except ImportError:
-    pass
-try:  # pragma: no cover
-    from . import similarity
-
-    _MODULES.append(similarity)
-except ImportError:
-    pass
-try:  # pragma: no cover
-    from . import textstats
-
-    _MODULES.append(textstats)
-except ImportError:
-    pass
-try:  # pragma: no cover
-    from . import multimodal
-
-    _MODULES.append(multimodal)
-except ImportError:
-    pass
-try:  # pragma: no cover
-    from . import advanced
-
-    _MODULES.append(advanced)
-except ImportError:
-    pass
-try:  # pragma: no cover
-    from . import pipeline
-
-    _MODULES.append(pipeline)
-except ImportError:
-    pass
-try:  # pragma: no cover
-    from . import curation
-
-    _MODULES.append(curation)
-except ImportError:
-    pass
-try:  # pragma: no cover
-    from . import timeseries
-
-    _MODULES.append(timeseries)
-except ImportError:
-    pass
-try:  # pragma: no cover
-    from . import quality
-
-    _MODULES.append(quality)
-except ImportError:
-    pass
-try:  # pragma: no cover
-    from . import mining
-
-    _MODULES.append(mining)
-except ImportError:
-    pass
-try:  # pragma: no cover
-    from . import maintenance
-
-    _MODULES.append(maintenance)
-except ImportError:
-    pass
-try:  # pragma: no cover
-    from . import fuzzy
-
-    _MODULES.append(fuzzy)
-except ImportError:
-    pass
-try:  # pragma: no cover
-    from . import mixture
-
-    _MODULES.append(mixture)
-except ImportError:
-    pass
-try:  # pragma: no cover
-    from . import policy
-
-    _MODULES.append(policy)
-except ImportError:
-    pass
-try:  # pragma: no cover
-    from . import tpch_extra
-
-    _MODULES.append(tpch_extra)
-except ImportError:
-    pass
-
-
-# The driver caps its per-round CORRECTNESS check at the **first 50
-# entries of ``queries()`` dict order** (observed in rounds 1–4), so
-# the registry orders queries to spend those 50 slots where they buy
-# the most verification:
-#   1. never-verified / hash-stale queries first (a green row is only
-#      as good as the code it certified — see below), then
-#   2. verified queries, **oldest green row first** (the round each
-#      name was last independently driver-checked, from
-#      CORRECTNESS_r0N.json), so r1-vintage rows get re-certified
-#      before recent ones.
-# Every query, rotated-out or not, is still exact-value-checked locally
-# every test run against DuckDB at sf0.01 (tests/test_oracle_parity.py)
-# — rotation only picks which subset the driver independently
-# re-verifies in a given round. See SURVEY.md §6.1.
-#
-# A green row is only as good as the code it certified: a query whose
-# defining module changed AFTER its driver row went green keeps a
-# stale green (the r2 q43 regression shipped exactly this way). So
-# "driver-verified" is the conjunction of (a) a last-green-round entry
-# below and (b) the defining module's source-closure hash still
-# matching the hash frozen at verification time
-# (_verified_hashes.json, regenerated via ``freeze_verified_hashes()``
-# ONLY after the local DuckDB parity suite is green). An edited
-# module's queries automatically sort unverified-first for the next
-# driver round.
-#
-# Value = round of the query's most recent green driver row
-# (rows+schema+hash all true in CORRECTNESS_r0{value}.json).
-#
-# r6: the map is DERIVED from the committed CORRECTNESS_r*.json files
-# instead of hand-maintained — the r5/r6 verdicts both flagged the
-# same round-open failure mode (fresh green rows not recorded, so the
-# driver re-re-checks them and the stalest rows lose their slots).
-# Deriving removes the chore and the drift risk:
-#   - a name's value is its MAX fully-green round, invalidated by any
-#     LATER red row (q56's red r2 row is the precedent: green r1,
-#     red r2, re-certified r3 — derived value tracks the re-cert);
-#   - plan-changed queries are re-queued via _REQUEUE below, whose
-#     entries EXPIRE on their own once a newer green row lands (no
-#     round-open cleanup);
-#   - when the CORRECTNESS files are absent (installed package, bare
-#     checkout), everything sorts unverified — name order, the safe
-#     degradation.
-
-_PKG_DIR = _Path(__file__).resolve().parent
-_VERIFIED_HASH_FILE = _PKG_DIR / "_verified_hashes.json"
-_REPO_ROOT = _PKG_DIR.parent.parent
-
-
-def _correctness_rows() -> dict[int, dict]:
-    """round -> committed CORRECTNESS_r0N.json contents (driver-written
-    per-round oracle comparison records at the repo root)."""
-    out: dict[int, dict] = {}
-    for p in sorted(_REPO_ROOT.glob("CORRECTNESS_r*.json")):
-        try:
-            rnd = int(p.stem.rsplit("_r", 1)[1])
-            rows = _json.loads(p.read_text())
-        except (OSError, ValueError, IndexError):
-            # A present-but-unreadable record would silently degrade
-            # every name it verifies to "unverified" (ADVICE r6) —
-            # surface it; absence of the files entirely stays silent
-            # (installed package / bare checkout is the normal case).
-            import warnings
-
-            warnings.warn(
-                f"CORRECTNESS record {p.name} exists but failed to "
-                "parse; its rows are treated as unverified",
-                RuntimeWarning,
-                stacklevel=2,
-            )
-            continue
-        if isinstance(rows, dict):
-            out[rnd] = rows
-    return out
-
-
-def _derive_verified_rounds(
-    rows_by_round: dict[int, dict], requeue: dict[str, int]
-) -> dict[str, int]:
-    """name -> round of its most recent fully-green driver row
-    (rows+schema+hash all true), dropped when a LATER round recorded a
-    red row for the name or when ``requeue`` invalidates rounds <= N."""
-    green: dict[str, int] = {}
-    red: dict[str, int] = {}
-    for rnd, rows in rows_by_round.items():
-        for name, row in rows.items():
-            ok = isinstance(row, dict) and bool(
-                row.get("rows_match")
-                and row.get("schema_match")
-                and row.get("hash_match")
-            )
-            bucket = green if ok else red
-            bucket[name] = max(bucket.get(name, 0), rnd)
-    return {
-        name: rnd
-        for name, rnd in green.items()
-        if rnd > red.get(name, 0) and rnd > requeue.get(name, 0)
-    }
-
-
-# Plan-changed queries re-queued for driver re-certification (the r3
-# q43/q56 policy): ``name: N`` invalidates green rows from rounds <= N,
-# so the name sorts unverified-first until the driver writes a newer
-# green row — at which point the entry expires by itself. All locally
-# verified value-identical against the DuckDB oracle (sf0.01 + sf1
-# targeted sweep) before the round-end hash freeze.
-#
-# r9 open: the nine r8 re-queues (stage-sharing extensions + the sf20
-# sweep fixes — q26/q44/q52/q79/q92/q105/q108/q111/q117) all expired:
-# CORRECTNESS_r08.json carries a fully-green row for each, so the
-# derivation already outranked their `: 7` entries. Pruned per the
-# round-open checklist. Add entries here ONLY for queries whose
-# executed plan changes this round (values locally re-verified vs the
-# DuckDB oracle before the round-end hash freeze).
-#
-# r10 open: the ten r9 re-queues (ANN construction-fix + lazy pins +
-# pin-join hints — q26/q44/q66/q111/q79/q53/q72/q116/q105/q117) all
-# expired: CORRECTNESS_r09.json carries a fully-green row for each, so
-# the derivation already outranked their `: 8` entries. Pruned per the
-# round-open checklist.
-#
-# r10 re-queue — value locally verified exact vs the DuckDB oracle
-# (sf0.01 via verify_oracle.py --stale; pair-set parity test at
-# sf0.001) but the executed plan changed:
-#   q106 — the stream-stream interval join's equality key now includes
-#     floor(ts/horizon), killing the per-user state-scan quadratic an
-#     availableNow backfill exposed (25x pair-scan work for 5x data;
-#     judge r9 #1). Gated decade ladder now 0.6/1.6/2.8x in
-#     scale_proof.json.
-#   q43/q92/q100/q107/q110 — every drain now runs on the RocksDB
-#     state-store provider (extensions._stream_state_width): the
-#     sf80 probe found heap-resident HDFS-backed join state exceeding
-#     the JVM and wedging Spark's abort path. Values are
-#     provider-invariant (parity tests + sf0.01 oracle re-pass), but
-#     the executed runtime changed — requeued out of caution.
-_REQUEUE: dict[str, int] = {
-    # (r12's seven re-queues — q105/q117 salted anti-join, q25/q119/
-    # q121 banded_postings sharing, q52 null-text guard — all
-    # expired: CORRECTNESS_r12.json carries green rows that outrank
-    # the `: 11` entries. Pruned per the round-open checklist.)
-    #
-    # r13: _drop_overcap_fps gained the explicit NULL-fp filter
-    # (ADVICE r12 — the LEFT ANTI kept NULL fps where the inner joins
-    # it replaced dropped them; latent-only on this corpus, whose fps
-    # are non-null by construction). Value-identical, but the
-    # executed plan grew a Filter node.
-    "q105_winnow_overlap": 12,
-    "q117_winnow_cap_recall": 12,
-    # r13b: the k-means assignment's distance expression moved from
-    # the 64-term unrolled literal chain to the zip_with/aggregate
-    # fold (same left-assoc IEEE order — centroids and assignments
-    # verified bit-identical at sf0.1, oracle-exact at sf0.01 + sf1;
-    # ~3.5 s of Janino compile removed per bench run). Plan changed;
-    # the rest of the 40-query similarity.py closure is plan- and
-    # value-identical (re-driven green both scales) and re-frozen.
-    "q120_kmeans_embeddings": 12,
-    # r13c: the q81/q83 profile moved from the single-scan
-    # 29-aggregate form (7 exact COUNT(DISTINCT)s → Catalyst Expand,
-    # ×8 row amplification through the whole update path) to a union
-    # of per-column TWO-LEVEL aggregates — each branch scans one
-    # parquet column chunk, groupBy(value) map-side combines to
-    # distinct values, a 1-row rollup derives nulls/distinct/min/max.
-    # Values oracle-exact at sf0.01 + sf1; plan changed (Expand count
-    # 1→0, scan count 1→7 single-column).
-    "q81_profile_stats": 12,
-    "q83_profile_sketch": 12,
-}
-
-_DRIVER_VERIFIED_ROUND = _derive_verified_rounds(
-    _correctness_rows(), _REQUEUE
+from . import (
+    advanced, aggregates, curation, dedup, extensions, fuzzy, joins,
+    maintenance, mining, misses, mixture, multimodal, pipeline, policy,
+    quality, rime, scalars, scans, similarity, textstats, timeseries,
+    tpch_extra, windows,
 )
 
-# Backwards-compatible name-set view (tests and tooling key off this).
-_DRIVER_VERIFIED = frozenset(_DRIVER_VERIFIED_ROUND)
-
-
-def _intra_package_imports(path: _Path) -> set[_Path]:
-    """Package-internal .py files imported by ``path``.
-
-    Walks the module's AST (so function-local imports like
-    extensions.py's ``from ..streaming.twin import ...`` count too) and
-    resolves every relative import — ``from .sib import x``,
-    ``from . import sib``, ``from ..pkg.mod import x``,
-    ``from ..pkg import mod`` — to an existing file. This feeds the
-    hash closure below: an edit to dedup.py must invalidate the
-    driver-verified rows of mining/pipeline/quality, which execute
-    dedup's helpers (the stale-green hole ADVICE r3 flagged).
-    """
-    import ast
-
-    out: set[_Path] = set()
-    try:
-        tree = ast.parse(path.read_text())
-    except (OSError, SyntaxError):  # pragma: no cover
-        return out
-    for node in ast.walk(tree):
-        if not (isinstance(node, ast.ImportFrom) and node.level > 0):
-            continue
-        base = path.resolve().parent
-        for _ in range(node.level - 1):
-            base = base.parent
-        parts = node.module.split(".") if node.module else []
-        mod_path = base.joinpath(*parts) if parts else base
-        as_file = mod_path.with_suffix(".py")
-        if parts and as_file.is_file():
-            out.add(as_file.resolve())
-            continue
-        for alias in node.names:  # `from .pkg import mod` forms
-            sub = mod_path / (alias.name + ".py")
-            if sub.is_file():
-                out.add(sub.resolve())
-    return out
-
-
-# Pure-infrastructure files EXEMPT from the per-query hash closure
-# (judge r7 next-round #5). Rationale: _stage_cache.py sits in the
-# import closure of nearly every operator module, so any edit to it —
-# even one whose behavior is already pinned by its own contract suite
-# (tests/test_stage_cache.py) — staled the driver verification of the
-# majority of the registry (63/118 in r7, 13 more than the 50-slot
-# driver cap), crowding the rotation off the genuinely stalest rows.
-# The cache is plan plumbing, not query semantics: every query's
-# VALUES are independent of whether a stage was pinned or rebuilt
-# (bench_nosharing.json exists precisely to keep the two cost paths
-# separable), so its correctness lives in the contract tests, not in
-# per-query oracle rows. A file listed here must have a dedicated test
-# module exercising both of its behavior branches.
-_CLOSURE_EXEMPT = frozenset({"_stage_cache.py"})
-
-
-def _source_closure(path: _Path) -> list[_Path]:
-    """Transitive closure of ``path`` over intra-package imports,
-    minus :data:`_CLOSURE_EXEMPT` infrastructure (still traversed, so
-    an exempt file's own imports — none today — would stay covered
-    through any non-exempt importer)."""
-    seen: set[_Path] = set()
-    stack = [path.resolve()]
-    while stack:
-        p = stack.pop()
-        if p in seen:
-            continue
-        seen.add(p)
-        stack.extend(_intra_package_imports(p))
-    return sorted(
-        p for p in seen
-        if p.name not in _CLOSURE_EXEMPT or p == path.resolve()
-    )
-
-
-_HASH_CACHE: dict[str, str] = {}
-
-
-def _module_src_hash(mod) -> str:
-    """Stable digest of a query module's defining source files: the
-    module itself plus every package-internal file it transitively
-    imports (readers/schemas shims, sibling helpers, streaming twins)."""
-    base = _Path(mod.__file__).resolve()
-    cached = _HASH_CACHE.get(str(base))
-    if cached is not None:
-        return cached
-    h = _hashlib.sha256()
-    for p in _source_closure(base):
-        h.update(str(p.relative_to(_PKG_DIR.parent)).encode())
-        h.update(p.read_bytes())
-    digest = h.hexdigest()[:16]
-    _HASH_CACHE[str(base)] = digest
-    return digest
-
-
-def _load_verified_hashes() -> dict[str, str]:
-    try:
-        return _json.loads(_VERIFIED_HASH_FILE.read_text())
-    except (OSError, ValueError):  # pragma: no cover
-        return {}
-
-
-def _query_owner() -> dict[str, object]:
-    """Map each registered query name to its defining module."""
-    owner: dict[str, object] = {}
-    for m in _MODULES:
-        for name in m.QUERIES:
-            owner[name] = m
-    return owner
-
-
-def freeze_verified_hashes() -> None:
-    """Re-freeze module source hashes. Run ONLY after
-    ``pytest tests/test_oracle_parity.py`` is fully green."""
-    hashes = {
-        _Path(m.__file__).stem: _module_src_hash(m) for m in _MODULES
-    }
-    _VERIFIED_HASH_FILE.write_text(_json.dumps(hashes, indent=1) + "\n")
-
-
-_FROZEN_HASHES = _load_verified_hashes()
-_OWNER = _query_owner()
-
-
-def _is_driver_verified(name: str) -> bool:
-    if name not in _DRIVER_VERIFIED:
-        return False
-    mod = _OWNER.get(name)
-    if mod is None:  # pragma: no cover
-        return False
-    stem = _Path(mod.__file__).stem
-    return _FROZEN_HASHES.get(stem) == _module_src_hash(mod)
-
-
-def _rotation_key(name: str) -> tuple[int, int, str]:
-    """Unverified (never-green or hash-stale) first; then verified
-    names ordered by the round of their last green driver row, oldest
-    first, so leftover cap slots re-certify the stalest rows."""
-    if not _is_driver_verified(name):
-        return (0, 0, name)
-    return (1, _DRIVER_VERIFIED_ROUND.get(name, 0), name)
+_MODULES = [
+    scans, misses, aggregates, windows, scalars, joins, extensions, rime,
+    dedup, similarity, textstats, multimodal, advanced, pipeline, curation,
+    timeseries, quality, mining, maintenance, fuzzy, mixture, policy,
+    tpch_extra,
+]
 
 
 def all_queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    out: dict[str, Callable[[SparkSession, str], DataFrame]] = {}
-    for m in _MODULES:
-        out.update(m.QUERIES)
-    return dict(sorted(out.items(), key=lambda kv: _rotation_key(kv[0])))
+    return {k: v for m in _MODULES for k, v in m.QUERIES.items()}
 
 
 def all_oracles() -> dict[str, str]:
-    out: dict[str, str] = {}
-    for m in _MODULES:
-        out.update(getattr(m, "ORACLE", {}))
     return {
-        k: " ".join(v.split())
-        for k, v in sorted(out.items(), key=lambda kv: _rotation_key(kv[0]))
+        k: " ".join(v.split()) for m in _MODULES for k, v in m.ORACLE.items()
     }

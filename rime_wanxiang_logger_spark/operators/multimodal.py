@@ -31,6 +31,7 @@ fake derivations — the dispatch is the seam, not the registered row.
 
 from __future__ import annotations
 
+import importlib.util
 from collections.abc import Iterator
 
 import pandas as pd
@@ -92,12 +93,7 @@ def make_fake_decode_batch():
 
 def has_pil() -> bool:
     """Capability gate for the real decode bodies."""
-    try:
-        import PIL  # noqa: F401
-
-        return True
-    except ImportError:  # pragma: no cover - container has no PIL
-        return False
+    return importlib.util.find_spec("PIL") is not None
 
 
 _RESIZE_SCHEMA = (

@@ -253,7 +253,7 @@ def q54_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     decorrelation rewrites it (RewriteCorrelatedScalarSubquery) into
     an aggregate + join — the physical plan has no per-row subquery.
     """
-    # DataFrame parameter binding (the udtf_chunker pattern) instead of
+    # DataFrame parameter binding (``spark.sql(..., name=df)``) instead of
     # createOrReplaceTempView: no session temp-view namespace pollution,
     # no clobbering a user's same-named views (judge r1 advice).
     return spark.sql(

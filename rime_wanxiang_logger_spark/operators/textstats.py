@@ -166,8 +166,7 @@ def q64_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Overlapping token-window chunking — the doc→training-sample
     explosion every LLM pipeline runs. Native formulation: one
     ``sequence`` of chunk starts + ``explode`` + ``slice`` — pure JVM,
-    no Python in the hot path (the UDTF twin in ``udtf_chunker`` exists
-    to prove the API surface, not to run at 100 TB)."""
+    no Python in the hot path."""
     docs = load_table(spark, sf_dir, "documents")
     return (
         docs.select(

@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Merge a verify_oracle.py sf1-drive log into scale_parity.json.
 
-Every round's choreography re-drives the hash-stale query closure at
-/tmp/sf1 and merges the per-query outcomes over the standing artifact
+A parity sweep re-drives the queries an edit could affect at sf1 and
+merges the per-query outcomes over the standing artifact
 (untouched rows carry forward — values are deterministic, so a green
 row stays green until its module closure changes). This was an inline
 snippet re-written each round (r7-r12); committing it makes the merge

@@ -9,30 +9,10 @@ inherit the repo on sys.path, so running from inside /root/repo would
 mask the closure-pickling rule every mapInPandas entry point follows.
 
     python scripts/verify_oracle.py [query ...]    # subset by name
-    python scripts/verify_oracle.py --stale        # only queries whose
-                                                   # defining module's
-                                                   # source closure was
-                                                   # edited since the
-                                                   # last hash freeze
     DRIVE_SF_DIR=/tmp/sf1 \
     DRIVE_SKIP_ORACLE=q53_dedup_clusters,... \
       python scripts/verify_oracle.py              # other scales;
                                                    # rows-only names
-
-``--stale`` makes the sf1 full-parity sweep INCREMENTAL (judge r5
-next-round #5): the full 117-query sf1 drive is ~19 min — the best
-bug-finder the project has (it caught the r5 rank-nondeterminism bug),
-but too slow per edit batch. The stale set reuses the registry's own
-closure-hash staleness (operators._is_driver_verified), so after
-editing a module mid-round:
-
-    python scripts/make_sf1.py            # once per session (/tmp wiped)
-    DRIVE_SF_DIR=/tmp/sf1 DRIVE_SKIP_ORACLE=<recursive-CC names> \
-      python scripts/verify_oracle.py --stale
-
-re-drives exactly the queries the edit could have affected, typically
-single-digit minutes for a one-module edit. Run BEFORE
-freeze_verified_hashes() — the freeze marks everything fresh again.
 
 Exit 0 iff every compared query matches exactly."""
 import json
@@ -77,16 +57,6 @@ for t in TABLES:
 queries = e.queries()
 oracles = e.oracle_sql()
 only = sys.argv[1:]  # optional subset of query names
-if "--stale" in only:
-    only.remove("--stale")
-    import rime_wanxiang_logger_spark.operators as _ops
-
-    stale = [q for q in queries if not _ops._is_driver_verified(q)]
-    print(f"--stale: {len(stale)} queries with edited module closures")
-    if not stale and not only:
-        print("nothing stale — all module hashes match the freeze")
-        sys.exit(0)
-    only.extend(stale)
 # names whose DuckDB oracle is intractable at large SF (recursive
 # transitive-closure CTEs are O(V*component) — an oracle-formulation
 # limit, not an engine one): run the Spark side, report rows-only.

@@ -1572,6 +1572,61 @@ def test_vecs_dimension_guard_fails_loud_on_short_vectors(spark, tmp_path):
     assert sorted(len(r["v"]) for r in got) == [63, 64]
 
 
+def _source_closure(path):
+    """``path`` plus every package .py file it transitively imports via
+    relative imports — ``from .sib import x``, ``from . import sib``,
+    ``from ..pkg.mod import x``, ``from ..pkg import mod`` — including
+    function-local ones (extensions.py imports its streaming twin
+    inside the wrappers)."""
+    import ast
+
+    seen: set = set()
+    stack = [path.resolve()]
+    while stack:
+        p = stack.pop()
+        if p in seen:
+            continue
+        seen.add(p)
+        for node in ast.walk(ast.parse(p.read_text())):
+            if not (isinstance(node, ast.ImportFrom) and node.level):
+                continue
+            base = p.parents[node.level - 1]
+            parts = node.module.split(".") if node.module else []
+            mod = base.joinpath(*parts)
+            if parts and mod.with_suffix(".py").is_file():
+                stack.append(mod.with_suffix(".py"))
+                continue
+            stack.extend(
+                mod / f"{a.name}.py"
+                for a in node.names
+                if (mod / f"{a.name}.py").is_file()
+            )
+    return seen
+
+
+def test_source_closure_covers_sibling_imports():
+    """The pin-join audit below picks its candidate modules by this
+    closure, so a module that runs a sibling's pin-consuming helper
+    must see that sibling — the dependency edges the audit relies on,
+    plus the streaming twin and the global shims."""
+    from pathlib import Path
+
+    from rime_wanxiang_logger_spark.operators import (
+        advanced, curation, dedup, extensions, mining, pipeline, similarity,
+    )
+
+    def closure(mod):
+        return {p.name for p in _source_closure(Path(mod.__file__))}
+
+    assert "similarity.py" in closure(advanced)      # _dot/_norm/_vecs
+    assert "dedup.py" in closure(mining)             # _signatures et al.
+    assert "dedup.py" in closure(pipeline)
+    assert "pipeline.py" in closure(curation)        # _h32
+    assert "pipeline.py" in closure(similarity)      # q72 local import
+    assert "twin.py" in closure(extensions)          # streaming queries
+    assert {"readers.py", "schemas.py"} <= closure(dedup)
+
+
 def _pin_call_sites(fn, call_re, _seen=None):
     """provide(/consume( call sites reachable from ``fn``: its own
     source plus, transitively, every package function it references —
@@ -1657,7 +1712,7 @@ def test_corpus_proportional_pin_joins_never_broadcast(spark, sf_dir):
     call_re = re.compile(r"\b(provide|consume)\(")
     candidates: dict = {}
     for m in ops._MODULES:
-        closure = ops._source_closure(Path(m.__file__))
+        closure = _source_closure(Path(m.__file__))
         if any(call_re.search(p.read_text()) for p in closure):
             candidates.update(m.QUERIES)
     # twin.py must stay free of DIRECT pin call sites — this text

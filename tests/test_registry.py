@@ -1,196 +1,31 @@
-"""Registry / verification-rotation invariants (SURVEY §6).
-
-The r2 q43 regression shipped because a behavior-affecting edit kept a
-stale green driver row. These tests pin the fix: a module whose source
-no longer matches the hash frozen at verification time must sort its
-queries unverified-first, so the driver's capped per-round oracle check
-lands on them again.
-"""
+"""Registry invariants: the static ``_MODULES`` list is the whole
+operator inventory, and ``all_queries()`` is its concatenation."""
 
 from __future__ import annotations
 
-import json
+import re
 from pathlib import Path
 
 import rime_wanxiang_logger_spark.operators as ops
 
 
-def test_stale_module_sorts_unverified_first(monkeypatch):
-    name = "q01_scan_count"
-    assert name in ops._DRIVER_VERIFIED
-    mod = ops._OWNER[name]
-    stem = Path(mod.__file__).stem
-    # fresh hash -> verified bucket (sorts after unverified)
-    monkeypatch.setitem(ops._FROZEN_HASHES, stem, ops._module_src_hash(mod))
-    assert ops._rotation_key(name)[0] == 1
-    # simulated source edit: frozen hash no longer matches -> unverified
-    monkeypatch.setitem(ops._FROZEN_HASHES, stem, "0" * 16)
-    assert ops._rotation_key(name)[0] == 0
-
-
-def test_never_verified_query_sorts_first():
-    # A name with no green driver row sorts unverified-first regardless
-    # of hash state (r4: all 92 registered queries are green, so pin the
-    # policy with a synthetic name rather than a round-specific one).
-    assert "q00_not_yet_verified" not in ops._DRIVER_VERIFIED
-    assert ops._rotation_key("q00_not_yet_verified")[0] == 0
-
-
-def test_hash_closure_covers_sibling_imports():
-    # ADVICE r3 (medium): modules executing code imported from sibling
-    # modules must fold those siblings into their verified hash, so a
-    # sibling edit invalidates the importer's green rows. Pin the three
-    # flagged dependency edges plus the streaming twin + global shims.
-    from rime_wanxiang_logger_spark.operators import (
-        advanced, curation, dedup, extensions, mining, pipeline, similarity,
-    )
-
-    def closure(mod):
-        return {p.name for p in ops._source_closure(Path(mod.__file__))}
-
-    assert "similarity.py" in closure(advanced)      # _dot/_norm/_vecs
-    assert "dedup.py" in closure(mining)             # _signatures et al.
-    assert "dedup.py" in closure(pipeline)
-    assert "pipeline.py" in closure(curation)        # _h32
-    assert "pipeline.py" in closure(similarity)      # q72 local import
-    assert "twin.py" in closure(extensions)          # streaming queries
-    # global shims reach every module transitively
-    assert {"readers.py", "schemas.py"} <= closure(dedup)
-
-
-def test_hash_changes_when_closure_file_edited(tmp_path):
-    # Byte-level sensitivity: copy a module + a closure sibling into a
-    # sandbox, hash, touch the SIBLING only, hash again -> must differ.
-    import rime_wanxiang_logger_spark.operators.mining as mining
-
-    files = ops._source_closure(Path(mining.__file__))
-    h1 = ops._hashlib.sha256()
-    for p in sorted(files):
-        h1.update(p.read_bytes())
-    sib = next(p for p in files if p.name == "dedup.py")
-    h2 = ops._hashlib.sha256()
-    for p in sorted(files):
-        h2.update(p.read_bytes() + (b"#x" if p == sib else b""))
-    assert h1.hexdigest() != h2.hexdigest()
-
-
-def test_frozen_hash_file_well_formed():
-    data = json.loads(ops._VERIFIED_HASH_FILE.read_text())
-    stems = {Path(m.__file__).stem for m in ops._MODULES}
-    assert set(data) <= stems
-    assert all(
-        isinstance(v, str) and len(v) == 16 for v in data.values()
-    )
-
-
-def test_registry_orders_unverified_before_verified():
-    names = list(ops.all_queries())
-    buckets = [ops._rotation_key(n)[0] for n in names]
-    # monotone: all 0s (unverified) strictly before all 1s (verified)
-    assert buckets == sorted(buckets)
+def test_every_query_module_is_registered():
+    # a module left out of the static list would silently drop its
+    # queries from queries()/oracle_sql() and from every parity check
+    pkg = Path(ops.__file__).parent
+    defining = {
+        p.stem
+        for p in pkg.glob("*.py")
+        if re.search(r"^QUERIES\s*[:=]", p.read_text(), re.M)
+    }
+    assert defining == {Path(m.__file__).stem for m in ops._MODULES}
 
 
 def test_every_query_has_an_owner_module():
-    assert set(ops.all_queries()) == set(ops._OWNER)
-
-
-def test_verified_rotation_is_oldest_green_first():
-    # r5: among hash-fresh verified names, the driver's leftover cap
-    # slots must land on the STALEST green rows — last-green round
-    # ascending, never newest-first or alphabetical across rounds.
-    names = list(ops.all_queries())
-    verified = [n for n in names if ops._rotation_key(n)[0] == 1]
-    rounds = [ops._DRIVER_VERIFIED_ROUND[n] for n in verified]
-    assert rounds == sorted(rounds), verified
-
-
-def test_verified_round_map_covers_verified_set():
-    # the name-set view and the round map must never drift apart
-    assert set(ops._DRIVER_VERIFIED) == set(ops._DRIVER_VERIFIED_ROUND)
-    assert all(
-        isinstance(r, int) and r >= 1
-        for r in ops._DRIVER_VERIFIED_ROUND.values()
-    )
-
-
-def test_verified_rounds_derive_from_correctness_files():
-    # r6: the map is computed from the committed CORRECTNESS_r*.json
-    # records, not hand-maintained (the r5 verdict's round-open failure
-    # mode). Pin the derivation rules on synthetic data:
-    g = {"rows_match": True, "schema_match": True, "hash_match": True}
-    r = {"rows_match": True, "schema_match": True, "hash_match": False}
-    rows = {
-        1: {"a": g, "b": g, "c": g},
-        2: {"b": r},           # later red row invalidates b's r1 green
-        3: {"b": g, "d": g},   # ...until a newer green re-certifies it
-    }
-    out = ops._derive_verified_rounds(rows, {})
-    assert out == {"a": 1, "b": 3, "c": 1, "d": 3}
-    # requeue invalidates greens <= N and EXPIRES once a newer green
-    # lands (no round-open cleanup needed):
-    assert "c" not in ops._derive_verified_rounds(rows, {"c": 1})
-    assert ops._derive_verified_rounds(rows, {"b": 2})["b"] == 3
-    # the live map equals the derivation over the committed files —
-    # any hand edit that drifts from the records fails here
-    assert ops._DRIVER_VERIFIED_ROUND == ops._derive_verified_rounds(
-        ops._correctness_rows(), ops._REQUEUE
-    )
-    # q56's history is the red-row precedent: green r1, red r2 (the
-    # stale-green regression round), re-certified later — the derived
-    # value must postdate the red row
-    hist = ops._correctness_rows()
-    assert hist[2]["q56_hash_split"]["hash_match"] is False
-    assert ops._DRIVER_VERIFIED_ROUND["q56_hash_split"] > 2
-
-
-def test_stage_cache_exempt_from_hash_closure():
-    # judge r7 #5: _stage_cache.py is contract-tested infrastructure
-    # (tests/test_stage_cache.py pins both the local and durable pin
-    # branches); an edit to it must NOT stale every importing query's
-    # driver verification. It is excluded from every OTHER module's
-    # closure...
-    from rime_wanxiang_logger_spark.operators import (
-        advanced, policy, similarity,
-    )
-
-    def closure(mod):
-        return {p.name for p in ops._source_closure(Path(mod.__file__))}
-
-    for mod in (advanced, policy, similarity):
-        assert "_stage_cache.py" not in closure(mod)
-    # ...while an operator-module edit still stales its own closure:
-    # the sibling-edge and byte-sensitivity tests above pin that, and
-    # the exemption must not have widened — only the named infra file
-    # is exempt, and a module asked about itself always includes itself.
-    assert ops._CLOSURE_EXEMPT == {"_stage_cache.py"}
-    assert "similarity.py" in closure(advanced)
-    from rime_wanxiang_logger_spark.operators import _stage_cache
-    assert "_stage_cache.py" in closure(_stage_cache)
-
-
-def test_closure_exempt_files_have_dedicated_contract_suites():
-    # ADVICE r8: the exemption's precondition — "a file listed here
-    # must have a dedicated test module exercising its behavior" — was
-    # prose. Enforce it mechanically: every exempt file must ship a
-    # tests/test_<name>.py with a non-trivial number of test functions,
-    # so removing or gutting the contract suite while keeping the
-    # exemption fails loudly here.
-    tests_dir = Path(__file__).resolve().parent
-    for fname in ops._CLOSURE_EXEMPT:
-        suite = tests_dir / f"test_{fname.removesuffix('.py').lstrip('_')}.py"
-        assert suite.is_file(), (
-            f"{fname} is hash-closure-exempt but has no dedicated "
-            f"contract suite at {suite.name}"
-        )
-        n_tests = sum(
-            1
-            for line in suite.read_text().splitlines()
-            if line.startswith("def test_")
-        )
-        assert n_tests >= 3, (
-            f"{suite.name} has only {n_tests} test functions — too thin "
-            f"to justify exempting {fname} from the hash closure"
-        )
+    # all_queries() is the concatenation of the modules' QUERIES in
+    # _MODULES order (shadowing: test_oracle_parity)
+    names = [n for m in ops._MODULES for n in m.QUERIES]
+    assert list(ops.all_queries()) == names
 
 
 def test_bench_trace_verdict():
