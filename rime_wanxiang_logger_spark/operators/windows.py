@@ -27,7 +27,10 @@ Scale notes:
 
 from __future__ import annotations
 
+from itertools import accumulate
+
 from pyspark.sql import DataFrame, SparkSession, Window as W, functions as F
+from pyspark.sql.types import ArrayType
 
 from ..sources.readers import load_table
 from .events_model import COMMIT_TYPE, RANK_SQL, commits, with_rank
@@ -86,9 +89,10 @@ def q10_topk_misses(spark: SparkSession, sf_dir: str) -> DataFrame:
     misses = commits(ev).where(F.col("rank") > 0)
     per_key = misses.groupBy("rank").agg(F.count(F.lit(1)).alias("miss_freq"))
     # Aggregated to ≤ #distinct ranks rows, but ordered ranks still go
-    # through the two-phase global_row_number: a handful of extra tiny
-    # shuffles buys an engine-wide "no unpartitioned ordered window"
-    # invariant (pinned for every registered query in test_plans).
+    # through the two-phase global_row_number: one range shuffle and a
+    # construction-time totals collect buy an engine-wide "no unpartitioned
+    # ordered window" invariant (pinned for every registered query in
+    # test_plans).
     return (
         global_row_number(
             per_key,
@@ -109,35 +113,38 @@ def global_cumsum(
     cast: str | None = None,
 ) -> DataFrame:
     """Distributed running ``SUM(value)`` over a TOTAL order without a
-    single-task WindowExec: range-repartition on the sort keys (ranges
-    ascend with partition id), cumsum within each partition, then add
-    the broadcast per-partition total offsets.
+    single-task WindowExec, as a two-phase prefix sum:
 
-    The classic two-phase global prefix sum: every step is fact-scale
-    parallel except the offset cumsum, which runs on ≤ #partitions
-    aggregated rows (the :func:`tiny_window` class). The ordering must
-    be total (include a unique tiebreaker like ``event_id``) for
-    deterministic output.
+    1. range-repartition on the sort keys into ``npart`` partitions
+       (ranges ascend with partition id) and take the running sum
+       within each partition;
+    2. add to each row the sum of all lower partitions' totals.
 
-    CORRECTNESS: the per-partition pass is PINNED (lazy
-    ``localCheckpoint``) before the totals/offsets branches read it.
-    This is mandatory, not an optimization. The earlier form relied on
-    exchange reuse to give both branches one materialized range
-    shuffle — but ``spark_partition_id()`` is a NONDETERMINISTIC
-    expression, which breaks canonical plan equality, so the reuse
-    rule never fires: the final plan materialized the
-    ``repartitionByRange`` exchange once per branch (verified in the
-    formatted plan — three Exchanges, zero ReusedExchange), each
-    sampling its OWN range boundaries. The samples happened to agree
-    at sf0.01/sf0.1; the r5 sf1 scale proof caught them diverging
-    (q04's report_pos interleaved two boundary layouts — CHECK the
-    sf1 parity log before trusting any rank built on partition ids).
-    With the pin, every consumer reads the one evaluated (pid, lcs)
-    table, so ranks are deterministic by construction. The pin is a
-    fact-scale materialization (MEMORY_AND_DISK): acceptable because
-    every registered global rank runs on aggregated or
-    heavily-filtered inputs (q10: ≤ #distinct ranks rows; q04: the
-    miss subset) — rank the aggregate, never the raw fact table.
+    Invariants:
+
+    - The ordering must be total (include a unique tiebreaker like
+      ``event_id``) for deterministic output.
+    - The per-partition pass is PINNED (lazy ``localCheckpoint``) before
+      anything reads it. This is mandatory for correctness, not an
+      optimization: ``spark_partition_id()`` is nondeterministic, so
+      exchange reuse never fires, and every reader of an unpinned pass
+      would run its own ``repartitionByRange`` with its own sampled
+      boundaries. Totals computed over one layout and added to rows of
+      another give wrong ranks. With the pin every reader sees the one
+      evaluated ``(_pid, _lcs)`` table.
+    - The offsets come from the ≤ ``npart`` per-partition totals,
+      collected to the driver over the pin; the exclusive prefix sums
+      are added by a projection (``element_at`` into a literal array),
+      so the plan has no join and no broadcast.
+    - Building the plan executes the pass: the totals ``collect()``
+      runs the range-boundary sampling job, the range shuffle, the pin
+      and the totals aggregate. With AQE on that is 5 Spark jobs per
+      call (3 before the collect replaced the offset join, which ran
+      only the sampling and the range shuffle); with AQE off, 2 (was 1).
+      Explain-only callers therefore materialize the pin too. The pin
+      is a fact-scale materialization (MEMORY_AND_DISK), so rank an
+      aggregated or filtered input (q10: ≤ #distinct ranks rows; q04:
+      the miss subset), never the raw fact table.
     """
     spark = df.sparkSession
     npart = int(
@@ -158,28 +165,21 @@ def global_cumsum(
         )
         .localCheckpoint(eager=False)
     )
-    totals = local.groupBy("_pid").agg(F.sum("_v").alias("_cnt"))
-    # Offsets via a triangular join on the ≤ #partitions totals rows —
-    # NOT an ordered unpartitioned window (Catalyst folds constant
-    # partition keys away, so there is no way to "declare" a benign
-    # single-partition window; the engine simply has none).
-    offsets = (
-        totals.alias("a")
-        .join(
-            F.broadcast(totals.alias("b")),
-            F.col("b._pid") < F.col("a._pid"),
-            "left",
-        )
-        .groupBy(F.col("a._pid").alias("_pid"))
-        .agg(F.coalesce(F.sum("b._cnt"), F.lit(0)).alias("_off"))
+    totals_df = local.groupBy("_pid").agg(F.sum("_v").alias("_tot"))
+    totals = dict(totals_df.collect())
+    offsets = accumulate(
+        (totals.get(pid) or 0 for pid in range(npart - 1)), initial=0
     )
-    out = local.join(F.broadcast(offsets), "_pid").withColumn(
+    off_type = ArrayType(totals_df.schema["_tot"].dataType)
+    off = F.element_at(
+        F.array(*(F.lit(o) for o in offsets)).cast(off_type),
+        F.col("_pid") + 1,
+    )
+    out = local.withColumn(
         out_col,
-        (F.col("_off") + F.col("_lcs")).cast(cast)
-        if cast
-        else (F.col("_off") + F.col("_lcs")),
+        (off + F.col("_lcs")).cast(cast) if cast else off + F.col("_lcs"),
     )
-    return out.drop("_pid", "_v", "_lcs", "_off")
+    return out.drop("_pid", "_v", "_lcs")
 
 
 def global_row_number(

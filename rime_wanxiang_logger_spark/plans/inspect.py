@@ -79,8 +79,9 @@ def unpartitioned_windows(df: DataFrame) -> list[str]:
     every pre-frame argument carries an ASC/DESC marker.
 
     The engine bans these outright: global ranks and prefix sums go
-    through windows.global_cumsum / global_row_number (two-phase, with
-    a triangular offset join instead of an offset window). A constant
+    through windows.global_cumsum / global_row_number (two-phase: the
+    per-partition totals are collected and their prefix offsets added
+    by a projection, instead of an offset window). A constant
     partitionBy(lit(...)) does NOT count as partitioned — Catalyst
     folds it away before execution. An entry here is a scale bug.
     """

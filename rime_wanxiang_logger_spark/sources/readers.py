@@ -16,13 +16,98 @@ Reference parity:
 Scale notes (100 TB): the loader takes any directory of parquet; on a
 real lake the events table would be written partitioned by
 ``event_date`` so date predicates prune partitions before any IO.
+
+Schema memo (:func:`read_parquet`): parquet schema inference launches a
+Spark job per read, even for one file. The first read of a path infers;
+later reads of the same unchanged path pass the remembered schema
+through ``.schema()`` and launch no job. So the memo saves work only on
+repeated reads, e.g. several reports over one events table in one
+application; a first read pays inference plus the stamp below. An entry
+is valid while its key and stamp both match:
+
+- key: the application id, the path, the reader options and the session
+  confs that change what inference returns (``_INFERENCE_CONFS``);
+- stamp: the Hadoop ``FileStatus`` modification time and length of each
+  entry the path matches (``globStatus``: a plain path or a glob) plus,
+  for a directory, those of its direct children. The stamp is taken
+  before the read, so a path rewritten after it is inferred again on
+  the next read. A path that matches nothing is not memoized and reaches
+  Spark unchanged, which raises its usual ``PATH_NOT_FOUND``.
+
+On a local or HDFS path this catches a rewritten file and an entry added,
+removed or renamed in the directory or in one of its child directories.
+It misses changes further down the tree, and a file under a child
+directory rewritten in place. On an object store a directory's
+modification time is meaningless (a prefix has no inode), so only the
+direct children that are files are checked and a rewrite under a
+partition prefix is not seen: there the memo rests on the same
+assumption as ``operators/_stage_cache``, that inputs are immutable
+within a session. The memo is not cleared with the stage cache, because
+its validity is checked by file status, not by that assumption.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import StructType
 
 from ..schemas import RIME_EVENT_SCHEMA, STAR_TABLES
+
+#: Session confs that change what parquet schema inference returns.
+_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
+
+#: (app id, path, options, confs) -> (stamp, inferred schema).
+_SCHEMAS: dict[tuple, tuple[tuple, StructType]] = {}
+
+
+def _stamp(spark: SparkSession, path: str) -> tuple | None:
+    """Modification time and length of each entry ``path`` matches and,
+    for a directory, of each direct child, read through the Hadoop
+    ``FileSystem``; ``None`` when the path matches nothing."""
+    jvm = spark.sparkContext._jvm
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    fs = hpath.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration())
+    matches = fs.globStatus(hpath)
+    if not matches:
+        return None
+    stamp = []
+    for st in matches:
+        stamp.append((st.getPath().toString(), st.getModificationTime(), st.getLen()))
+        if st.isDirectory():
+            stamp.extend(sorted(
+                (c.getPath().getName(), c.getModificationTime(), c.getLen())
+                for c in fs.listStatus(st.getPath())
+            ))
+    return tuple(stamp)
+
+
+def read_parquet(spark: SparkSession, path: str, **options) -> DataFrame:
+    """``spark.read.options(**options).parquet(path)`` that infers the
+    schema of an unchanged path once per application (see the module
+    docstring for when an entry is reused)."""
+    reader = spark.read.options(**options)
+    stamp = _stamp(spark, path)
+    if stamp is None:
+        return reader.parquet(path)
+    key = (
+        spark.sparkContext.applicationId,
+        path,
+        tuple(sorted((k, str(v)) for k, v in options.items())),
+        tuple(spark.conf.get(c) for c in _INFERENCE_CONFS),
+    )
+    hit = _SCHEMAS.get(key)
+    if hit is not None and hit[0] == stamp:
+        return reader.schema(hit[1]).parquet(path)
+    df = reader.parquet(path)
+    _SCHEMAS[key] = (stamp, df.schema)
+    return df
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -33,7 +118,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     a long we convert to microsecond TIMESTAMP_NTZ (matching how the
     DuckDB oracle's CAST(ts AS TIMESTAMP) truncates ns → us).
     """
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    df = read_parquet(spark, f"{sf_dir}/{name}.parquet")
     if name == "events" and dict(df.dtypes).get("ts") == "bigint":
         df = df.withColumn(
             "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
@@ -109,7 +194,8 @@ def ingest_rime_jsonl(spark: SparkSession, path: str, bronze_dir: str) -> DataFr
     above does not apply to the parquet copy).
     """
     read_rime_jsonl(spark, path).write.mode("overwrite").parquet(bronze_dir)
-    return spark.read.parquet(bronze_dir)
+    # read back with the schema just written: no inference job
+    return spark.read.schema(RIME_EVENT_SCHEMA).parquet(bronze_dir)
 
 
 def ingest_rime_jsonl_observed(

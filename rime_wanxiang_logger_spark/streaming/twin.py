@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 from ..schemas import RIME_EVENT_SCHEMA
-from ..sources.readers import load_table
+from ..sources.readers import load_table, read_parquet
 from ..operators.windows import SESSION_GAP_SECONDS
 
 EVENTS_STREAM_SCHEMA = "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string, value double, props string"
@@ -53,17 +53,16 @@ def read_events_stream(
     File sources need an explicit schema, and the events ``ts`` column
     has shipped both as TIMESTAMP(MICROS) and as TIMESTAMP(NANOS)
     (which Spark surfaces as a long under the nanosAsLong shim). Peek
-    at the on-disk dtype with a one-off batch scan — the same guard the
-    batch reader applies (sources/readers.py) — and declare the stream
+    at the on-disk dtype through the batch reader's schema memo
+    (``sources.readers.read_parquet``, the same guard ``load_table``
+    applies; an unchanged directory is inferred once) and declare the stream
     schema to match, converting nanos→us only when the file really
     stores nanos. Getting this wrong collapses every event to 1970 and
     silently empties all watermarked windows.
     """
     ts_is_long = (
         dict(
-            spark.read.option("pathGlobFilter", "events*.parquet")
-            .parquet(sf_dir)
-            .dtypes
+            read_parquet(spark, sf_dir, pathGlobFilter="events*.parquet").dtypes
         ).get("ts")
         == "bigint"
     )

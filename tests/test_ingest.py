@@ -12,6 +12,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from pyspark.sql import functions as F
 
 from rime_wanxiang_logger_spark.sources.readers import (
@@ -201,3 +203,190 @@ def test_schema_evolution_merge_reads_both_generations(spark, sf_dir, tmp_path):
     assert merged.count() == ev.count()
     assert merged.where(F.col("schema_ver").isNull()).count() == old_half.count()
     assert merged.where(F.col("schema_ver") == 2).count() == new_half.count()
+
+
+def test_bronze_read_back_matches_inferred_read(spark, tmp_path):
+    """``ingest_rime_jsonl`` reads bronze back with the schema it wrote,
+    not by inference: the schema and the rows must equal an inferred
+    read of the same directory."""
+    log = tmp_path / "log.jsonl"
+    _write_log(log)
+    bronze_dir = str(tmp_path / "bronze")
+    bronze = ingest_rime_jsonl(spark, str(log), bronze_dir)
+    inferred = spark.read.parquet(bronze_dir)
+    assert bronze.schema == inferred.schema
+    key = lambda r: tuple(str(v) for v in r)  # noqa: E731
+    assert sorted(bronze.collect(), key=key) == sorted(inferred.collect(), key=key)
+
+
+def _jobs_in(spark, group, fn):
+    """(fn(), number of Spark jobs ``fn`` launched)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _write_parquet(path, columns: dict):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    pq.write_table(pa.table(columns), str(path))
+
+
+def test_schema_memo_second_read_launches_no_job(spark, tmp_path):
+    """The first ``load_table`` of a path infers its schema (a Spark
+    job); a second read of the unchanged path reuses it and launches
+    no job at all."""
+    import uuid
+
+    from rime_wanxiang_logger_spark.sources.readers import load_table
+
+    _write_parquet(tmp_path / "t.parquet", {"a": [1, 2, 3]})
+    tag = uuid.uuid4().hex
+    first, _ = _jobs_in(spark, f"memo-1-{tag}", lambda: load_table(spark, str(tmp_path), "t"))
+    again, n_jobs = _jobs_in(spark, f"memo-2-{tag}", lambda: load_table(spark, str(tmp_path), "t"))
+    assert n_jobs == 0
+    assert again.schema == first.schema
+    assert sorted(r["a"] for r in again.collect()) == [1, 2, 3]
+
+
+def test_schema_memo_reinfers_rewritten_path(spark, tmp_path):
+    """A path rewritten with an added column is inferred again: the
+    memo is validated by file status, so the new column shows."""
+    from rime_wanxiang_logger_spark.sources.readers import load_table
+
+    path = tmp_path / "t.parquet"
+    _write_parquet(path, {"a": [1, 2]})
+    assert load_table(spark, str(tmp_path), "t").columns == ["a"]
+    assert load_table(spark, str(tmp_path), "t").columns == ["a"]
+    _write_parquet(path, {"a": [1, 2], "b": ["x", "y"]})
+    df = load_table(spark, str(tmp_path), "t")
+    assert df.columns == ["a", "b"]
+    assert sorted(tuple(r) for r in df.collect()) == [(1, "x"), (2, "y")]
+
+
+def test_schema_memo_keeps_options_apart(spark, tmp_path):
+    """One directory read under two ``pathGlobFilter`` options holds two
+    memo entries: each read keeps its own schema, also when memoized."""
+    import uuid
+
+    from rime_wanxiang_logger_spark.sources.readers import read_parquet
+
+    _write_parquet(tmp_path / "x.parquet", {"a": [1]})
+    _write_parquet(tmp_path / "y.parquet", {"b": ["y"]})
+    d = str(tmp_path)
+    for _ in range(2):
+        xs = read_parquet(spark, d, pathGlobFilter="x*.parquet")
+        ys = read_parquet(spark, d, pathGlobFilter="y*.parquet")
+        assert xs.columns == ["a"] and [tuple(r) for r in xs.collect()] == [(1,)]
+        assert ys.columns == ["b"] and [tuple(r) for r in ys.collect()] == [("y",)]
+    _, n_jobs = _jobs_in(
+        spark,
+        f"memo-opts-{uuid.uuid4().hex}",
+        lambda: read_parquet(spark, d, pathGlobFilter="y*.parquet"),
+    )
+    assert n_jobs == 0
+
+
+def test_schema_memo_keys_inference_confs(spark, tmp_path):
+    """A session conf that changes what inference returns is part of the
+    memo key: flipping ``inferTimestampNTZ`` between two reads of one
+    unchanged file changes the inferred ``ts`` type."""
+    import datetime as dt
+
+    import pyarrow as pa
+
+    from rime_wanxiang_logger_spark.sources.readers import load_table
+
+    _write_parquet(
+        tmp_path / "t.parquet", {"ts": pa.array([dt.datetime(2026, 1, 1)], pa.timestamp("us"))}
+    )
+    conf = "spark.sql.parquet.inferTimestampNTZ.enabled"
+    prev = spark.conf.get(conf)
+    try:
+        spark.conf.set(conf, "true")
+        assert dict(load_table(spark, str(tmp_path), "t").dtypes)["ts"] == "timestamp_ntz"
+        spark.conf.set(conf, "false")
+        assert dict(load_table(spark, str(tmp_path), "t").dtypes)["ts"] == "timestamp"
+    finally:
+        spark.conf.set(conf, prev)
+
+
+def test_schema_memo_passes_missing_and_glob_paths_to_spark(spark, tmp_path):
+    """A missing table still fails with Spark's own ``PATH_NOT_FOUND``,
+    on every read; a glob path reads like ``spark.read.parquet`` does
+    and is memoized like a plain path."""
+    import uuid
+
+    from pyspark.errors import AnalysisException
+
+    from rime_wanxiang_logger_spark.sources.readers import load_table, read_parquet
+
+    for _ in range(2):
+        with pytest.raises(AnalysisException, match="PATH_NOT_FOUND"):
+            load_table(spark, str(tmp_path), "missing")
+    _write_parquet(tmp_path / "p1.parquet", {"a": [1]})
+    _write_parquet(tmp_path / "p2.parquet", {"a": [2]})
+    glob = f"{tmp_path}/p*.parquet"
+    assert sorted(r["a"] for r in read_parquet(spark, glob).collect()) == [1, 2]
+    again, n_jobs = _jobs_in(
+        spark, f"memo-glob-{uuid.uuid4().hex}", lambda: read_parquet(spark, glob)
+    )
+    assert n_jobs == 0
+    assert sorted(r["a"] for r in again.collect()) == [1, 2]
+
+
+def test_nanos_events_take_micros_branch_through_memo(spark, tmp_path):
+    """The ts-unit guard survives the memo: a ``timestamp[ns]`` events
+    file is converted nanos→micros by both ``load_table`` and
+    ``read_events_stream``, on first and memoized reads, and rewriting
+    the same file in place as ``timestamp[us]`` flips both readers to
+    the plain branch."""
+    import datetime as dt
+
+    import pyarrow as pa
+
+    from rime_wanxiang_logger_spark.sources.readers import load_table
+    from rime_wanxiang_logger_spark.streaming import twin
+
+    base = dt.datetime(2026, 8, 13, 1, 0, 1, 250_000)
+    # the ns digits below the microsecond must be truncated, not rounded
+    ns = [int(base.replace(tzinfo=dt.timezone.utc).timestamp()) * 10**9 + 250_000_999]
+    expect = [base]
+
+    def stage(unit, values):
+        _write_parquet(
+            tmp_path / "events.parquet",
+            {
+                "event_id": pa.array([1], pa.int64()),
+                "ts": pa.array(values, pa.timestamp(unit)),
+                "user_id": pa.array([7], pa.int64()),
+                "event_type": ["click"],
+                "value": [1.5],
+                "props": ["{}"],
+            },
+        )
+
+    def batch_ts():
+        return [r["ts"] for r in load_table(spark, str(tmp_path), "events").collect()]
+
+    def stream_ts(name):
+        ev = twin.read_events_stream(spark, str(tmp_path))
+        assert dict(ev.dtypes)["ts"] == "timestamp_ntz"
+        q = twin.run_stream_to_memory(ev.select("ts"), name, "append")
+        try:
+            return [r["ts"] for r in spark.sql(f"SELECT ts FROM {name}").collect()]
+        finally:
+            q.stop()
+
+    stage("ns", ns)
+    for i in range(2):
+        assert batch_ts() == expect
+        assert stream_ts(f"ns_events_{i}") == expect
+    stage("us", [v // 1000 for v in ns])
+    assert batch_ts() == expect
+    assert stream_ts("us_events") == expect

@@ -7,6 +7,8 @@ these tests pin the plan shape itself.
 
 from __future__ import annotations
 
+import pytest
+
 from rime_wanxiang_logger_spark.operators.aggregates import (
     q07_accuracy_summary,
     q20_rollup,
@@ -1247,6 +1249,95 @@ def test_global_row_number_tie_heavy_deterministic(spark):
     assert [r["rn"] for r in by_rn] == list(range(1, n + 1))
     keys = [(-r["freq"], r["choice"], r["uid"]) for r in by_rn]
     assert keys == sorted(keys)
+
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+@pytest.mark.parametrize("case", ["sparse", "double", "int_cast"])
+def test_global_cumsum_matches_python_running_sum(spark, aqe, case):
+    """The driver-side prefix offsets give exactly the running sum a
+    plain Python loop gives over the sorted rows: with empty range
+    partitions (fewer rows than partitions), over a ``double`` value
+    (dyadic, so every summation order is exact), with ``cast="int"``,
+    and with AQE on and off."""
+    from pyspark.sql import functions as F
+
+    from rime_wanxiang_logger_spark.operators.windows import global_cumsum
+
+    n, npart = {"sparse": (5, 16), "double": (3_000, 8), "int_cast": (3_000, 8)}[case]
+    df = spark.range(n, numPartitions=4).select(
+        ((F.col("id") * 48271) % 99991).alias("k"), F.col("id").alias("tie")
+    )
+    if case == "double":
+        value = ((F.col("tie") * 37) % 11) * 0.25 - 1.0
+    else:
+        value = (F.col("tie") % 7) - 2
+    df = df.withColumn("v", value)
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    try:
+        out = global_cumsum(
+            df,
+            [F.asc("k"), F.asc("tie")],
+            F.col("v"),
+            "cs",
+            num_partitions=npart,
+            cast="int" if case == "int_cast" else None,
+        )
+        rows = out.collect()
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    expect_type = {"sparse": "bigint", "double": "double", "int_cast": "int"}[case]
+    assert dict(out.dtypes)["cs"] == expect_type
+    rows.sort(key=lambda r: (r["k"], r["tie"]))
+    running, acc = [], 0
+    for r in rows:
+        acc += r["v"]
+        running.append(acc)
+    assert len(rows) == n
+    assert [r["cs"] for r in rows] == running
+
+
+def test_global_row_number_plan_has_no_join(spark):
+    """Offsets are a projection over the pinned pass: no broadcast, no
+    join anywhere in a ranked plan."""
+    from pyspark.sql import functions as F
+
+    from rime_wanxiang_logger_spark.operators.windows import global_row_number
+
+    df = spark.range(1_000, numPartitions=4).select(
+        ((F.col("id") * 48271) % 99991).alias("k"), F.col("id").alias("tie")
+    )
+    plan = explain_str(global_row_number(df, [F.asc("k"), F.asc("tie")]))
+    assert "BroadcastExchange" not in plan, plan
+    assert "Join" not in plan, plan
+
+
+@pytest.mark.parametrize("aqe, max_jobs", [("true", 5), ("false", 2)])
+def test_global_row_number_construction_jobs(spark, aqe, max_jobs):
+    """Building a ranked plan executes the range pass and collects the
+    per-partition totals; the job count stated in the global_cumsum
+    docstring is an upper bound pinned here."""
+    import uuid
+
+    from pyspark.sql import functions as F
+
+    from rime_wanxiang_logger_spark.operators.windows import global_row_number
+
+    df = spark.range(1_000, numPartitions=4).select(
+        ((F.col("id") * 48271) % 99991).alias("k"), F.col("id").alias("tie")
+    )
+    sc = spark.sparkContext
+    group = f"cumsum-build-{uuid.uuid4().hex}"
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    sc.setJobGroup(group, group)
+    try:
+        global_row_number(df, [F.asc("k"), F.asc("tie")])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
+    assert 1 <= len(sc.statusTracker().getJobIdsForGroup(group)) <= max_jobs
 
 
 def test_q101_lm_score_one_context_exchange(spark, sf_dir):
