@@ -105,14 +105,12 @@ def main() -> None:
     # of the plan itself.
     # Stage sharing ON (operators/_stage_cache.py): providers
     # (q25/q26/q52/q104 ...) still rebuild every pass — their timings
-    # stay the honest plan cost — while stage consumers (the
-    # STAGE_CONSUMERS tuple: compositions like q72/q111/q116, plus
-    # r8's index/fingerprint readers q44/q105/q117) reuse the
-    # session's pinned stage outputs, which is their documented cost
-    # semantic (SURVEY §2.11f); their standalone costs land in
-    # bench_nosharing.json below.
+    # stay the honest plan cost — while stage consumers (compositions
+    # like q72/q111/q116, plus the index/fingerprint readers
+    # q44/q105/q117) reuse the session's pinned stage outputs, which
+    # is their documented cost semantic (SURVEY §2.11f); their
+    # standalone costs land in bench_nosharing.json below.
     from rime_wanxiang_logger_spark.operators._stage_cache import (
-        STAGE_CONSUMERS,
         clear as clear_stage_pins,
         recording,
         sharing,
@@ -126,6 +124,10 @@ def main() -> None:
     # it ran (providers always do; consumers on a cold pin too).
     timings: dict[str, float] = {}
     consumed: dict[str, list[str]] = {}
+    # Stage consumers: the queries that read a pin (aux: model-memo
+    # reads do not count) in either timed pass — re-timed with sharing
+    # OFF below.
+    stage_consumers: set[str] = set()
     # Mid-run probe trace (r13): the before/after cpu_probe endpoints
     # cannot see a co-tenant throttle TRANSIENT inside the ~10-min
     # timed window — the r13 idle bench read q16-q20 at 2-4x their
@@ -152,6 +154,8 @@ def main() -> None:
                         "overwrite"
                     ).save()
                 dt = round(time.perf_counter() - t0, 4)
+                if any(not r.startswith("aux:") for r in reads):
+                    stage_consumers.add(name)
                 if name not in timings or dt < timings[name]:
                     timings[name] = dt
                     consumed[name] = sorted(set(reads))
@@ -170,7 +174,7 @@ def main() -> None:
     nosharing: dict[str, float] = {}
     registry = all_queries()
     for _pass in range(2):
-        for name in STAGE_CONSUMERS:
+        for name in sorted(stage_consumers):
             t0 = time.perf_counter()
             registry[name](spark, sf_dir).write.format("noop").mode(
                 "overwrite"

@@ -227,8 +227,9 @@ def _ivf_index(
     across the broadcast boundary); now centroids aggregate over the
     one pinned narrow assignment joined back to the corpus. The pinned
     tables are O(n)×2 cols and N_CELLS rows — never the n×d corpus.
-    Standalone cost separability: q44 is in STAGE_CONSUMERS, so
-    bench_nosharing.json keeps recording the full-rebuild cost."""
+    Standalone cost separability: q44 reads these pins, so bench.py
+    re-times it with sharing off and bench_nosharing.json keeps
+    recording the full-rebuild cost."""
     seeds = _seeds(v)
     scored = (
         v.crossJoin(F.broadcast(seeds))

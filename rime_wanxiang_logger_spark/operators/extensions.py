@@ -41,6 +41,12 @@ q43_stream_hourly     q13's hourly rollup executed through Structured
                       memory sink) — the batch/stream parity proof:
                       the streaming result hash-matches the same SQL
                       oracle as the batch plan.
+
+q43, q92, q100, q106, q107, q110 and q121 are the registered streaming
+drains: each builds its plan from the streaming/twin.py operators and
+runs it with one ``twin.drain`` call, which owns the trigger, the sink
+and the drain confs. twin.py is imported inside each wrapper because it
+imports ``operators.windows``; a module-level import would be circular.
 """
 
 from __future__ import annotations
@@ -54,135 +60,6 @@ from .similarity import _NEARDUP_CTE, EVAL_MOD, EVAL_REM
 from .windows import SESSION_GAP_SECONDS
 
 TUMBLE_HOURS = 6
-
-#: State-store partition width for the registered streaming drains.
-#: A streaming query's shuffle width is a DEPLOYMENT knob, not a
-#: semantic one: it fixes the number of state-store instances at the
-#: first checkpoint, and every micro-batch pays a per-partition state
-#: commit regardless of data volume (measured locally: the q106
-#: interval join costs 12.7/7.4/4.1 s at 32/16/8 partitions for the
-#: SAME 342 rows — pure fixed cost). Production sizes this to state
-#: volume and throughput per the checkpoint; the drained results are
-#: partition-count-invariant (driver-certified either way).
-STREAM_STATE_PARTITIONS = 8
-
-
-#: RocksDB state store for every drain (r10). The default HDFS-backed
-#: provider keeps ALL state as JVM-heap objects; an availableNow
-#: backfill of a large history through a stream-stream join buffers
-#: the whole horizon-unexpired corpus in state, and at sf80 (~48M
-#: join-state rows ≈ 18 GB) that exceeded the 8 GB local heap — tasks
-#: died and then WEDGED forever in Spark 4.1's
-#: ChecksumCheckpointFileManager.awaitResult inside
-#: SymmetricHashJoinStateManager's task-completion ABORT path (thread
-#: dump: every executor parked on a CompletionLatch that no pool
-#: thread will ever complete; the job hangs rather than fails).
-#: RocksDB keeps state off-heap and disk-backed — bounded memory at
-#: any SF — which is also the documented production posture
-#: (streaming/twin.py module doc). Parity across providers is pinned
-#: by tests (hourly rollup + the attribution join drain both
-#: hash-match under either provider).
-_ROCKSDB_PROVIDER = (
-    "org.apache.spark.sql.execution.streaming.state."
-    "RocksDBStateStoreProvider"
-)
-_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
-
-#: Changelog checkpointing for the RocksDB stores (r14, guide §1/§5:
-#: measured per-drain, not assumed). Default (false) uploads a FULL
-#: RocksDB snapshot per store per commit — ~40 store instances across
-#: a drain's stateful operators at STREAM_STATE_PARTITIONS=8, a pure
-#: fixed cost per micro-batch. Changelog mode appends only the batch's
-#: state DELTA at commit and leaves snapshot consolidation to the
-#: background maintenance thread — the documented low-commit-latency
-#: RocksDB posture, and the right one at ANY state size (the delta is
-#: bounded by the batch's writes, never the standing state). Measured
-#: at sf0.1 (best-of-2 per drain): q92 3.41→2.35, q110 2.77→2.17,
-#: q106 3.21→2.72, q100 1.43→1.14, q121 4.06→3.73, q107 2.09→1.99 —
-#: ~3 s across the seven drains, identical drained results
-#: (hash-parity re-verified against the batch oracles).
-_CHANGELOG_CONF = (
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-)
-
-#: No-data micro-batch suppression inside the drain scope (r15, guide
-#: §1 — measured, the single largest remaining drain fixed cost). An
-#: availableNow drain of a WATERMARKED query runs one extra no-data
-#: micro-batch after the last data batch purely to advance the
-#: watermark and evict state that is about to die with the query
-#: anyway: batch-count decomposition (scripts/profile_drains_r15.py,
-#: StreamingQueryListener) showed q92/q106/q121 each paying a 0.5–0.9 s
-#: batch 1 with numInputRows=0. Every drained RESULT is identical by
-#: construction: the update-mode aggregates (q92/q121) emit each
-#: verdict in the batch that delivered the doc, the inner stream-stream
-#: join (q106) emits on match, and the applyInPandasWithState twins
-#: (q107/q110) use NoTimeout so a no-data batch can never emit —
-#: re-proven against every batch oracle (streaming parity suite +
-#: oracle sweep). The conf is scoped: a CONTINUOUS production stream
-#: keeps the default (no-data batches are how watermarks advance
-#: through quiet periods); a bounded backfill drain has no quiet
-#: period to bridge.
-_NODATA_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
-
-#: RocksDB row tracking off inside the drain scope (r15, guide §5):
-#: with tracking on, every state-store put/delete pays a point lookup
-#: first just to maintain the numTotalStateRows METRIC — a
-#: read-amplification tax on the write path, linear in the batch's
-#: state writes at any scale. Documented RocksDB state-store tuning
-#: knob; results are unaffected (the metric reads -1). Measured
-#: together with _NODATA_CONF: the seven drains' same-session
-#: best-of-2 sum fell 12.76 → 10.57 s (q92 2.33→1.80, q106 2.67→1.93,
-#: q121 2.61→1.87); trackrows alone 12.76 → 12.29.
-_TRACKROWS_CONF = (
-    "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
-)
-
-
-class _stream_state_width:
-    """Scope the session's shuffle width down to the streaming state
-    width — and the state store to RocksDB (changelog commits, no
-    no-data batch, no row tracking) — for the duration of a drain,
-    restoring everything afterwards (the rest of the bench keeps the
-    batch-sized 32 and the default provider)."""
-
-    #: (conf key, pinned value, default-when-unset) — every drain conf
-    #: in one place so __enter__/__exit__ and the pin/restore test
-    #: cannot drift apart.
-    _PINNED: tuple[tuple[str, str, str | None], ...] = (
-        ("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS), None),
-        (_PROVIDER_CONF, _ROCKSDB_PROVIDER, None),
-        # explicit fallbacks: unlike providerClass these confs have no
-        # retrievable default on a vanilla session (conf.get throws)
-        (_CHANGELOG_CONF, "true", "false"),
-        (_NODATA_CONF, "false", "true"),
-        (_TRACKROWS_CONF, "false", "true"),
-    )
-
-    def __init__(self, spark: SparkSession):
-        self._spark = spark
-
-    def __enter__(self):
-        # No-default conf.get resolves Spark's built-in default (the
-        # provider class, the shuffle width); the explicit-default form
-        # is reserved for confs where conf.get would otherwise throw —
-        # passing None there would later restore a null (measured:
-        # IllegalArgumentException on exit in a vanilla session).
-        self._old = {
-            key: (
-                self._spark.conf.get(key)
-                if default is None
-                else self._spark.conf.get(key, default)
-            )
-            for key, _, default in self._PINNED
-        }
-        for key, value, _ in self._PINNED:
-            self._spark.conf.set(key, value)
-
-    def __exit__(self, *exc):
-        for key, old in self._old.items():
-            self._spark.conf.set(key, old)
-        return False
-
 
 PRICE_BAND_WIDTH = 100_000.0
 N_PRICE_BANDS = 7  # covers o_totalprice up to 700k
@@ -629,32 +506,23 @@ def q43_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Complete mode because the oracle needs every window: append mode
     would hold back windows newer than the watermark at end-of-stream.)
     """
-    from ..streaming.twin import read_events_stream
+    from ..streaming.twin import drain, read_table_stream
 
-    with _stream_state_width(spark):
-        ev = read_events_stream(spark, sf_dir)
-        rolled = (
-            ev.withColumn("ts", F.col("ts").cast("timestamp"))
-            .groupBy(F.window("ts", "1 hour").alias("win"))
-            .agg(
-                F.count(F.lit(1)).alias("n_events"),
-                dsum("value", scale=2).alias("sum_value"),
-            )
-            .select(
-                F.col("win.start").cast("timestamp_ntz").alias("bucket_hour"),
-                "n_events",
-                "sum_value",
-            )
+    rolled = (
+        read_table_stream(spark, sf_dir, "events")
+        .withColumn("ts", F.col("ts").cast("timestamp"))
+        .groupBy(F.window("ts", "1 hour").alias("win"))
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            dsum("value", scale=2).alias("sum_value"),
         )
-        q = (
-            rolled.writeStream.format("memory")
-            .queryName("q43_stream_hourly_sink")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
+        .select(
+            F.col("win.start").cast("timestamp_ntz").alias("bucket_hour"),
+            "n_events",
+            "sum_value",
         )
-        q.awaitTermination()
-    return spark.table("q43_stream_hourly_sink")
+    )
+    return drain(rolled, "q43_stream_hourly_sink", "complete")
 
 
 def q92_dedup_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -669,43 +537,20 @@ def q92_dedup_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
     memory sink. The stream emits verdicts for COLLIDING docs only
     (silent docs are admitted), so the oracle is q86's SQL restricted
     to n_cand > 0, minus the derived is_unique flag.
-    """
-    from ..operators.dedup import INCR_MOD, INCR_REM
-    from ..sources.readers import load_table
-    from ..streaming.twin import dedup_admit_stream
 
-    schema = load_table(spark, sf_dir, "documents").schema
-    stream = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        # file sources want a directory; glob-select the documents
-        # table (the read_events_stream pattern, streaming/twin.py)
-        .option("pathGlobFilter", "documents*.parquet")
-        .load(sf_dir)
-        .where((F.col("doc_id") % INCR_MOD) == F.lit(INCR_REM))
+    UPDATE mode (r5): the admit aggregate is watermarked per
+    (admission window, doc), so state evicts as the watermark advances
+    — the unbounded-stream shape. Each doc's verdict is final in the
+    batch that delivered the doc (the twin's docstring), so the update
+    rows ARE the verdict set.
+    """
+    from ..streaming.twin import dedup_admit_stream, drain, read_table_stream
+
+    stream = read_table_stream(spark, sf_dir, "documents").where(
+        (F.col("doc_id") % INCR_MOD) == F.lit(INCR_REM)
     )
-    # Build the plan OUTSIDE the state-width scope: the standing band
-    # table's eager pin (streaming/twin.dedup_admit_stream) then
-    # materializes at the session's full batch width; only the stream
-    # START below needs the narrow width (state-store instance count
-    # is fixed at stream start — _stream_state_width docstring).
     admit = dedup_admit_stream(spark, stream, sf_dir)
-    with _stream_state_width(spark):
-        q = (
-            admit
-            .writeStream.format("memory")
-            .queryName("q92_dedup_admit_sink")
-            # UPDATE mode (r5): the admit aggregate is watermarked per
-            # (admission window, doc), so state evicts as the watermark
-            # advances — the unbounded-stream shape. Each doc's verdict
-            # is final in the batch that delivered the doc (the twin's
-            # docstring), so the update rows ARE the verdict set.
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("q92_dedup_admit_sink")
+    return drain(admit, "q92_dedup_admit_sink", "update")
 
 
 def q121_decontaminate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -723,21 +568,11 @@ def q121_decontaminate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the probe is banded with the very model the standing index was
     built with (twin docstring).
     """
-    from ..operators.similarity import (
-        EVAL_MOD,
-        EVAL_REM,
-        banding_model,
-        eval_band_index,
-    )
-    from ..sources.readers import load_table
-    from ..streaming.twin import decontaminate_stream
+    from ..operators.similarity import banding_model, eval_band_index
+    from ..streaming.twin import decontaminate_stream, drain, read_table_stream
 
-    schema = load_table(spark, sf_dir, "embeddings").schema
     stream = (
-        spark.readStream.schema(schema)
-        .format("parquet")
-        .option("pathGlobFilter", "embeddings*.parquet")
-        .load(sf_dir)
+        read_table_stream(spark, sf_dir, "embeddings")
         .where(
             ((F.col("vec_id") % INCR_MOD) == F.lit(INCR_REM))
             & ((F.col("vec_id") % EVAL_MOD) != F.lit(EVAL_REM))
@@ -751,16 +586,13 @@ def q121_decontaminate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("v"),
         )
     )
-    # Plan built OUTSIDE the state-width scope (the q92 rule): the
-    # standing eval index pin and the banding-model sizing pass run at
-    # the session's full batch width; only the stream START needs the
-    # narrow width. r12: the model is derived ONCE here and shared by
-    # the eval index and the probe (ADVICE r11 — the former inline
-    # build sized the corpus twice), and the eval index reads the
-    # ``banded_postings`` stage pin batch-side (similarity.
-    # eval_band_index) so a sharing session bands the corpus once for
-    # q25/q119/q121 together; twin.py stays pin-free (the streaming
-    # audit rule — see STREAM_STATIC_AUDIT below).
+    # r12: the model is derived ONCE here and shared by the eval index
+    # and the probe (ADVICE r11 — the former inline build sized the
+    # corpus twice), and the eval index reads the ``banded_postings``
+    # stage pin batch-side (similarity.eval_band_index) so a sharing
+    # session bands the corpus once for q25/q119/q121 together; twin.py
+    # stays pin-free (the streaming audit rule — see STREAM_STATIC_AUDIT
+    # below).
     # banding_model (r14): memo-reading handle — inside sharing
     # the corpus-wide sizing pass runs once per session, not per
     # q121 call (the model triple is deterministic per sf_dir).
@@ -776,17 +608,7 @@ def q121_decontaminate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdicts = decontaminate_stream(
         spark, stream, sf_dir, eval_post=eval_post, model=model
     )
-    with _stream_state_width(spark):
-        q = (
-            verdicts
-            .writeStream.format("memory")
-            .queryName("q121_decontaminate_stream_sink")
-            .outputMode("update")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("q121_decontaminate_stream_sink")
+    return drain(verdicts, "q121_decontaminate_stream_sink", "update")
 
 
 def q100_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -804,19 +626,10 @@ def q100_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle needs every session; the unbounded form is watermark +
     append.
     """
-    from ..streaming.twin import read_events_stream, session_report_stream
+    from ..streaming.twin import drain, read_table_stream, session_report_stream
 
-    with _stream_state_width(spark):
-        q = (
-            session_report_stream(read_events_stream(spark, sf_dir))
-            .writeStream.format("memory")
-            .queryName("q100_stream_sessions_sink")
-            .outputMode("complete")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("q100_stream_sessions_sink")
+    sessions = session_report_stream(read_table_stream(spark, sf_dir, "events"))
+    return drain(sessions, "q100_stream_sessions_sink", "complete")
 
 
 def q106_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -830,20 +643,11 @@ def q106_stream_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Timestamps leave as unix micros (engine-agnostic, the q33/q100
     convention)."""
-    from ..streaming.twin import attribution_stream, read_events_stream
+    from ..streaming.twin import attribution_stream, drain, read_table_stream
 
-    with _stream_state_width(spark):
-        q = (
-            attribution_stream(read_events_stream(spark, sf_dir))
-            .writeStream.format("memory")
-            .queryName("q106_stream_attribution_sink")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
+    pairs = attribution_stream(read_table_stream(spark, sf_dir, "events"))
     us = lambda c: F.unix_micros(F.col(c).cast("timestamp"))  # noqa: E731
-    return spark.table("q106_stream_attribution_sink").select(
+    return drain(pairs, "q106_stream_attribution_sink", "append").select(
         "purchase_id",
         "user_id",
         us("purchase_ts").alias("purchase_ts_us"),
@@ -868,19 +672,10 @@ def q107_stateful_asof(spark: SparkSession, sf_dir: str) -> DataFrame:
     source plus maxFilesPerTrigger replays identically to the
     single-batch drain — parity-tested with a forced 3-batch drain
     (tests/test_streaming.py)."""
-    from ..streaming.twin import read_events_stream, stateful_asof_stream
+    from ..streaming.twin import drain, read_table_stream, stateful_asof_stream
 
-    with _stream_state_width(spark):
-        q = (
-            stateful_asof_stream(read_events_stream(spark, sf_dir))
-            .writeStream.format("memory")
-            .queryName("q107_stateful_asof_sink")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("q107_stateful_asof_sink")
+    carry = stateful_asof_stream(read_table_stream(spark, sf_dir, "events"))
+    return drain(carry, "q107_stateful_asof_sink", "append")
 
 
 def q110_stream_page_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -897,21 +692,13 @@ def q110_stream_page_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     micro-batch and carries the per-key last event_id across batches
     (raising on sequence violations), so the drain is
     batch-count-invariant — the q107 argument, r7 form."""
-    from ..streaming.twin import read_events_stream, stateful_page_rank_stream
+    from ..streaming.twin import drain, read_table_stream, stateful_page_rank_stream
     from .rime import map_events_to_rime
 
-    with _stream_state_width(spark):
-        rime_stream = map_events_to_rime(read_events_stream(spark, sf_dir))
-        q = (
-            stateful_page_rank_stream(rime_stream)
-            .writeStream.format("memory")
-            .queryName("q110_stream_page_rank_sink")
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table("q110_stream_page_rank_sink").select(
+    ranks = stateful_page_rank_stream(
+        map_events_to_rime(read_table_stream(spark, sf_dir, "events"))
+    )
+    return drain(ranks, "q110_stream_page_rank_sink", "append").select(
         "event_id",
         F.col("session_id").alias("user_id"),
         "committed_text",

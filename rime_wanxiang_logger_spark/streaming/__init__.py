@@ -5,13 +5,12 @@ from .twin import (  # noqa: F401
     decontaminate_stream,
     dedup_admit_stream,
     dedup_stream,
+    drain,
     hourly_rollup_stream,
-    read_events_stream,
     read_rime_jsonl_stream,
-    run_stream_to_memory,
+    read_table_stream,
     session_window_stream,
     stateful_asof_stream,
-    stateful_asof_tws,
     stateful_page_rank_stream,
     stream_to_parquet_foreachbatch,
 )

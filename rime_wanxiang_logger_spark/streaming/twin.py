@@ -5,7 +5,7 @@ The reference's producer is a single-threaded stateful stream processor
 an append-only stream. This module re-expresses that live pipeline on
 Spark Structured Streaming:
 
-- ``read_events_stream`` / ``read_rime_jsonl_stream``: the tailing scan
+- ``read_table_stream`` / ``read_rime_jsonl_stream``: the tailing scan
   (the Go bufio.Scanner loop, analyzer.go:59-80, as an unbounded source)
 - ``hourly_rollup_stream``: watermarked tumbling-window aggregation
   (T6 extension — late events beyond the watermark are dropped exactly
@@ -19,17 +19,24 @@ Spark Structured Streaming:
 - ``attribution_stream``: watermarked stream-stream interval join
   (purchase ← views within the preceding hour) — state bounded by the
   range condition, batch-parity tested
+- ``drain``: the one way the package runs a bounded stream — every
+  registered streaming query (q43/q92/q100/q106/q107/q110/q121) is its
+  plan plus one ``drain`` call (availableNow into a memory sink, under
+  the drain confs below); ``stream_to_parquet_foreachbatch`` is the
+  idempotent production sink.
 
 At scale: file sources become Kafka; the state store becomes RocksDB
 (``spark.sql.streaming.stateStore.providerClass``); watermarks bound
 state size (SURVEY §7.3.6).
 
-Test harness: parquet-dir sources + memory sink driven synchronously by
-``processAllAvailable`` (tests/test_streaming.py) — batch/stream parity
-is asserted against the batch queries on the same data.
+Tests (tests/test_streaming.py) drive the same twins continuously into
+a memory sink with ``processAllAvailable`` and assert batch/stream
+parity against the batch queries on the same data.
 """
 
 from __future__ import annotations
+
+from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -39,51 +46,45 @@ from ..sources.readers import load_table, read_parquet
 from ..operators.windows import SESSION_GAP_SECONDS
 
 EVENTS_STREAM_SCHEMA = "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string, value double, props string"
-_EVENTS_STREAM_SCHEMA_NANOS = "event_id bigint, ts bigint, user_id bigint, event_type string, value double, props string"
 
 
-def read_events_stream(
-    spark: SparkSession, sf_dir: str, options: dict | None = None
+def read_table_stream(
+    spark: SparkSession, sf_dir: str, name: str, options: dict | None = None
 ) -> DataFrame:
-    """Unbounded view of the events table (parquet file source).
-    ``options`` passes extra file-source options through (e.g.
-    ``maxFilesPerTrigger`` — the multi-batch parity tests force a
-    one-file-per-batch drain with it).
+    """Unbounded view of table ``name``: a parquet file source over the
+    ``name*.parquet`` files of ``sf_dir`` (file sources want a
+    directory; the prefix glob lets tests stage extra
+    ``events_N.parquet`` files). ``options`` passes extra file-source
+    options through (e.g. ``maxFilesPerTrigger`` — the multi-batch
+    parity tests force a one-file-per-batch drain with it).
 
-    File sources need an explicit schema, and the events ``ts`` column
-    has shipped both as TIMESTAMP(MICROS) and as TIMESTAMP(NANOS)
-    (which Spark surfaces as a long under the nanosAsLong shim). Peek
-    at the on-disk dtype through the batch reader's schema memo
-    (``sources.readers.read_parquet``, the same guard ``load_table``
-    applies; an unchanged directory is inferred once) and declare the stream
-    schema to match, converting nanos→us only when the file really
-    stores nanos. Getting this wrong collapses every event to 1970 and
+    File sources need an explicit schema: it is the on-disk one, read
+    through the batch reader's schema memo (``sources.readers.
+    read_parquet``; an unchanged directory is inferred once). The
+    events ``ts`` column has shipped both as TIMESTAMP(MICROS) and as
+    TIMESTAMP(NANOS) (which Spark surfaces as a long under the
+    nanosAsLong shim), so for ``events`` the stream converts nanos→us
+    only when the file really stores nanos — the guard ``load_table``
+    applies. Getting this wrong collapses every event to 1970 and
     silently empties all watermarked windows.
     """
-    ts_is_long = (
-        dict(
-            read_parquet(spark, sf_dir, pathGlobFilter="events*.parquet").dtypes
-        ).get("ts")
-        == "bigint"
-    )
-    schema = _EVENTS_STREAM_SCHEMA_NANOS if ts_is_long else EVENTS_STREAM_SCHEMA
+    glob = f"{name}*.parquet"
+    schema = read_parquet(spark, sf_dir, pathGlobFilter=glob).schema
     reader = (
         spark.readStream.schema(schema)
         .format("parquet")
-        # file sources want a directory; select just the events table
-        # (prefix glob so tests can stage extra events*_N.parquet files)
-        .option("pathGlobFilter", "events*.parquet")
+        .option("pathGlobFilter", glob)
     )
     for k, v in (options or {}).items():
         reader = reader.option(k, v)
     raw = reader.load(sf_dir)
-    if ts_is_long:
-        raw = raw.withColumn(
+    if name != "events":
+        return raw
+    if dict(raw.dtypes).get("ts") == "bigint":
+        return raw.withColumn(
             "ts", F.timestamp_micros(F.expr("ts div 1000")).cast("timestamp_ntz")
         )
-    else:
-        raw = raw.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
-    return raw
+    return raw.withColumn("ts", F.col("ts").cast("timestamp_ntz"))
 
 
 def read_rime_jsonl_stream(spark: SparkSession, path: str) -> DataFrame:
@@ -371,86 +372,6 @@ def stateful_page_rank_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def stateful_asof_tws(events: DataFrame) -> DataFrame:
-    """T2/T4 last-state carry on the MODERN stateful API
-    (``transformWithStateInPandas``, Spark 4): same semantics as
-    ``stateful_asof_stream`` but with typed per-key value state, state
-    TTL support, and timer hooks — the API Spark is converging on for
-    custom streaming state (applyInPandasWithState is the legacy twin).
-
-    Ordering: as with the legacy twin, all of a key's Arrow chunks in
-    a micro-batch are concatenated before ONE (ts, event_id) sort, so
-    the prior_value carry is correct even when a chunk boundary splits
-    a key (the per-chunk-sort caveat this docstring used to carry is
-    closed; multi-chunk parity is tested on the legacy twin, which
-    shares the pattern — the TWS test itself needs protobuf).
-
-    Requires the RocksDB state-store provider and the ``protobuf``
-    package (the TWS state-server protocol is protobuf-framed; absent
-    in this container, so the parity test skips — the operator is the
-    correct surface for protobuf-equipped clusters). At scale RocksDB
-    is what bounds memory for billions of keys (SURVEY §7.3.6).
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    def make_processor():
-        # Closure-defined class: pickled by value (multimodal.py rule).
-        class AsofProcessor(StatefulProcessor):
-            def init(self, handle: StatefulProcessorHandle) -> None:
-                self._last = handle.getValueState("last", "last double")
-
-            def handleInputRows(self, key, rows, timerValues):
-                import pandas as _pd
-
-                last = (
-                    self._last.get()[0] if self._last.exists() else None
-                )
-                out = []
-                chunks = [pdf for pdf in rows if len(pdf)]
-                if chunks:
-                    whole = _pd.concat(
-                        chunks, ignore_index=True
-                    ).sort_values(["ts", "event_id"])
-                    for row in whole.itertuples(index=False):
-                        if row.event_type == "purchase":
-                            out.append(
-                                (row.event_id, key[0], row.value, last)
-                            )
-                        else:
-                            last = row.value
-                if last is not None:
-                    self._last.update((last,))
-                yield _pd.DataFrame(
-                    out,
-                    columns=[
-                        "event_id",
-                        "user_id",
-                        "value",
-                        "prior_value",
-                    ],
-                )
-
-            def close(self) -> None:
-                pass
-
-        return AsofProcessor()
-
-    return events.select(
-        "event_id", "ts", "user_id", "event_type", "value"
-    ).groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=make_processor(),
-        outputStructType=(
-            "event_id bigint, user_id bigint, value double, "
-            "prior_value double"
-        ),
-        outputMode="Append",
-        timeMode="None",
-    )
-
-
 def dedup_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     """Streaming exact dedup (T5 / q21's streaming twin): drop repeat
     deliveries of the same event within the watermark horizon via
@@ -519,7 +440,6 @@ def dedup_admit_stream(
     pinned in tests/test_streaming.py.
     """
     from ..operators.dedup import _bands, _signatures
-    from ..sources.readers import load_table
 
     # PIN the standing band table (q86 pins its signature table the
     # same way). A stream-static join re-evaluates the static side
@@ -790,14 +710,139 @@ def stream_to_parquet_foreachbatch(
     q.awaitTermination()
 
 
-def run_stream_to_memory(stream_df: DataFrame, name: str, output_mode: str):
-    """Drive a bounded 'stream' to completion synchronously; returns the
-    query handle (results in the in-memory table ``name``)."""
-    q = (
-        stream_df.writeStream.outputMode(output_mode)
-        .format("memory")
+#: State-store partition width for every drain. A streaming query's
+#: shuffle width is a DEPLOYMENT knob, not a semantic one: it fixes the
+#: number of state-store instances at the first checkpoint, and every
+#: micro-batch pays a per-partition state commit regardless of data
+#: volume (measured locally: the q106 interval join costs 12.7/7.4/4.1 s
+#: at 32/16/8 partitions for the SAME 342 rows — pure fixed cost).
+#: Production sizes this to state volume and throughput per the
+#: checkpoint; the drained results are partition-count-invariant
+#: (driver-certified either way).
+STREAM_STATE_PARTITIONS = 8
+
+#: RocksDB state store for every drain (r10). The default HDFS-backed
+#: provider keeps ALL state as JVM-heap objects; an availableNow
+#: backfill of a large history through a stream-stream join buffers
+#: the whole horizon-unexpired corpus in state, and at sf80 (~48M
+#: join-state rows ≈ 18 GB) that exceeded the 8 GB local heap — tasks
+#: died and then WEDGED forever in Spark 4.1's
+#: ChecksumCheckpointFileManager.awaitResult inside
+#: SymmetricHashJoinStateManager's task-completion ABORT path (thread
+#: dump: every executor parked on a CompletionLatch that no pool
+#: thread will ever complete; the job hangs rather than fails).
+#: RocksDB keeps state off-heap and disk-backed — bounded memory at
+#: any SF — which is also the documented production posture (module
+#: doc). Parity across providers is pinned by tests (hourly rollup +
+#: the attribution join drain both hash-match under either provider).
+_ROCKSDB_PROVIDER = (
+    "org.apache.spark.sql.execution.streaming.state."
+    "RocksDBStateStoreProvider"
+)
+_PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
+
+#: Changelog checkpointing for the RocksDB stores (r14, measured
+#: per-drain). Default (false) uploads a FULL RocksDB snapshot per
+#: store per commit — ~40 store instances across a drain's stateful
+#: operators at STREAM_STATE_PARTITIONS=8, a pure fixed cost per
+#: micro-batch. Changelog mode appends only the batch's state DELTA at
+#: commit and leaves snapshot consolidation to the background
+#: maintenance thread — the documented low-commit-latency RocksDB
+#: posture, and the right one at ANY state size (the delta is bounded
+#: by the batch's writes, never the standing state). Measured at sf0.1
+#: (best-of-2 per drain): q92 3.41→2.35, q110 2.77→2.17, q106
+#: 3.21→2.72, q100 1.43→1.14, q121 4.06→3.73, q107 2.09→1.99 — ~3 s
+#: across the seven drains, identical drained results.
+_CHANGELOG_CONF = (
+    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
+)
+
+#: No-data micro-batches off (r15, measured — the single largest
+#: remaining drain fixed cost). An availableNow drain of a WATERMARKED
+#: query runs one extra no-data micro-batch after the last data batch
+#: purely to advance the watermark and evict state that is about to die
+#: with the query anyway: batch-count decomposition
+#: (scripts/profile_drains_r15.py, StreamingQueryListener) showed
+#: q92/q106/q121 each paying a 0.5–0.9 s batch 1 with numInputRows=0.
+#: Every drained RESULT is identical by construction: the update-mode
+#: aggregates (q92/q121) emit each verdict in the batch that delivered
+#: the doc, the inner stream-stream join (q106) emits on match, and the
+#: applyInPandasWithState twins (q107/q110) use NoTimeout so a no-data
+#: batch can never emit — re-proven against every batch oracle. The
+#: conf is scoped: a CONTINUOUS production stream keeps the default
+#: (no-data batches are how watermarks advance through quiet periods);
+#: a bounded backfill drain has no quiet period to bridge.
+_NODATA_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
+
+#: RocksDB row tracking off (r15): with tracking on, every state-store
+#: put/delete pays a point lookup first just to maintain the
+#: numTotalStateRows METRIC — a read-amplification tax on the write
+#: path, linear in the batch's state writes at any scale. Documented
+#: RocksDB state-store tuning knob; results are unaffected (the metric
+#: reads -1). Measured together with _NODATA_CONF: the seven drains'
+#: same-session best-of-2 sum fell 12.76 → 10.57 s (q92 2.33→1.80, q106
+#: 2.67→1.93, q121 2.61→1.87); trackrows alone 12.76 → 12.29.
+_TRACKROWS_CONF = (
+    "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
+)
+
+#: (conf key, pinned value, default-when-unset) — every drain conf in
+#: one place so the scope and its pin/restore test cannot drift apart.
+#: The explicit fallbacks are for confs that, unlike providerClass and
+#: the shuffle width, have no retrievable default on a vanilla session
+#: (conf.get throws; passing None would later restore a null —
+#: measured: IllegalArgumentException on exit in a vanilla session).
+_DRAIN_CONFS: tuple[tuple[str, str, str | None], ...] = (
+    ("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS), None),
+    (_PROVIDER_CONF, _ROCKSDB_PROVIDER, None),
+    (_CHANGELOG_CONF, "true", "false"),
+    (_NODATA_CONF, "false", "true"),
+    (_TRACKROWS_CONF, "false", "true"),
+)
+
+
+@contextmanager
+def _stream_state_width(spark: SparkSession):
+    """Pin the drain confs for the duration of a stream run and restore
+    them afterwards, also when the run raises (the rest of a session
+    keeps batch-width shuffles, the default provider and production
+    no-data-batch semantics)."""
+    old = {
+        key: spark.conf.get(key) if default is None else spark.conf.get(key, default)
+        for key, _, default in _DRAIN_CONFS
+    }
+    for key, value, _ in _DRAIN_CONFS:
+        spark.conf.set(key, value)
+    try:
+        yield
+    finally:
+        for key, value in old.items():
+            spark.conf.set(key, value)
+
+
+def drain(stream_df: DataFrame, name: str, output_mode: str) -> DataFrame:
+    """Run the bounded stream ``stream_df`` to completion and return its
+    result: ``trigger(availableNow=True)`` into the memory sink
+    ``name`` in ``output_mode``, then ``spark.table(name)``.
+
+    Only ``start()`` and ``awaitTermination()`` run under the drain
+    confs: the state-store width and provider are fixed at stream
+    start, while the caller's plan — including any eager pin of a
+    stream-static join's static side — is built at the session's full
+    batch width. A stream that fails re-raises here, stopped, with the
+    confs restored."""
+    spark = stream_df.sparkSession
+    writer = (
+        stream_df.writeStream.format("memory")
         .queryName(name)
-        .start()
+        .outputMode(output_mode)
+        .trigger(availableNow=True)
     )
-    q.processAllAvailable()
-    return q
+    with _stream_state_width(spark):
+        q = writer.start()
+        try:
+            q.awaitTermination()
+        except BaseException:
+            q.stop()
+            raise
+    return spark.table(name)

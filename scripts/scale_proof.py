@@ -18,7 +18,7 @@ dispatcher-event-loop thread during q107's sf80 drain (4M-row
 memory-sink collect + accumulated sink tables), and a dead dispatcher
 WEDGES the local scheduler — the job waits forever instead of
 failing (r10; same non-failing hang class as the state-store abort
-deadlock, see extensions._stream_state_width).
+deadlock, see the RocksDB note above streaming/twin.drain).
 """
 
 from __future__ import annotations

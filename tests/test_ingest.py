@@ -343,7 +343,7 @@ def test_schema_memo_passes_missing_and_glob_paths_to_spark(spark, tmp_path):
 def test_nanos_events_take_micros_branch_through_memo(spark, tmp_path):
     """The ts-unit guard survives the memo: a ``timestamp[ns]`` events
     file is converted nanos→micros by both ``load_table`` and
-    ``read_events_stream``, on first and memoized reads, and rewriting
+    ``read_table_stream``, on first and memoized reads, and rewriting
     the same file in place as ``timestamp[us]`` flips both readers to
     the plain branch."""
     import datetime as dt
@@ -375,13 +375,9 @@ def test_nanos_events_take_micros_branch_through_memo(spark, tmp_path):
         return [r["ts"] for r in load_table(spark, str(tmp_path), "events").collect()]
 
     def stream_ts(name):
-        ev = twin.read_events_stream(spark, str(tmp_path))
+        ev = twin.read_table_stream(spark, str(tmp_path), "events")
         assert dict(ev.dtypes)["ts"] == "timestamp_ntz"
-        q = twin.run_stream_to_memory(ev.select("ts"), name, "append")
-        try:
-            return [r["ts"] for r in spark.sql(f"SELECT ts FROM {name}").collect()]
-        finally:
-            q.stop()
+        return [r["ts"] for r in twin.drain(ev.select("ts"), name, "append").collect()]
 
     stage("ns", ns)
     for i in range(2):

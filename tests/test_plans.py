@@ -1822,14 +1822,15 @@ def test_corpus_proportional_pin_joins_never_broadcast(spark, sf_dir):
     flagged: dict[str, list[str]] = {}
     for name, fn in sorted(candidates.items()):
         src = inspect.getsource(fn)
-        if ".writeStream" in src:
-            # calling a streaming wrapper runs a full drain, so the
-            # audit can't execute it. Two sound cases (r12): a
-            # TRANSITIVELY pin-free closure — own source, module
-            # globals it names, and the locally-imported twin helpers
-            # (ADVICE r10) — needs no audit; a closure that DOES
-            # consume a pin must declare its batch static side in the
-            # module's STREAM_STATIC_AUDIT registry (extensions.py),
+        if re.search(r"\bdrain\(", src):
+            # a streaming wrapper ends in twin.drain(...), and calling
+            # it runs a full drain, so the audit can't execute it. Two
+            # sound cases (r12): a TRANSITIVELY pin-free closure — own
+            # source, module globals it names, and the locally-imported
+            # twin helpers (ADVICE r10) — needs no audit; a closure
+            # that DOES consume a pin must declare its batch static
+            # side in the module's STREAM_STATIC_AUDIT registry
+            # (extensions.py),
             # and that pre-checkpoint batch plan gets the identical
             # no-broadcast check every batch consumer gets (the
             # wrapper only adds the plan cut + the stream side, which

@@ -41,3 +41,30 @@ def test_bench_trace_verdict():
     assert not flag and ratio < 1.1
     ratio, flag = _trace_verdict([0.4, 0.41, 0.62])
     assert flag and ratio > 1.5
+
+
+def test_streams_start_only_in_twin_drain_paths():
+    # one drain path: every registered stream runs through twin.drain,
+    # and the only other stream start in the package is the production
+    # foreachBatch sink next to it
+    import ast
+
+    pkg = Path(ops.__file__).parent.parent
+    twin = pkg / "streaming" / "twin.py"
+    elsewhere = [
+        str(p.relative_to(pkg))
+        for p in sorted(pkg.rglob("*.py"))
+        if p != twin and ".writeStream" in p.read_text()
+    ]
+    assert elsewhere == []
+    src = twin.read_text()
+    per_def = {
+        node.name: ast.get_source_segment(src, node).count(".writeStream")
+        for node in ast.parse(src).body
+        if isinstance(node, ast.FunctionDef)
+    }
+    assert {k: n for k, n in per_def.items() if n} == {
+        "drain": 1,
+        "stream_to_parquet_foreachbatch": 1,
+    }
+    assert src.count(".writeStream") == 2

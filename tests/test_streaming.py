@@ -1,9 +1,13 @@
 """Streaming-twin tests: batch/stream parity on the same bounded data.
 
 Each stream is a parquet/JSONL file source driven synchronously to
-completion (processAllAvailable) into a memory sink, then compared
-against the equivalent batch query — the engine's differential-testing
-pattern applied to the streaming plane.
+completion into a memory sink, then compared against the equivalent
+batch query — the engine's differential-testing pattern applied to the
+streaming plane. The harness (``_run_to_memory``) runs the stream with
+the default continuous trigger and ``processAllAvailable``, so
+watermarks advance through no-data batches and a test can append input
+and process again; the registered queries' ``twin.drain`` turns both
+off, and its own scope and failure path are tested at the end.
 """
 
 from __future__ import annotations
@@ -23,17 +27,22 @@ from rime_wanxiang_logger_spark.operators.windows import q09_asof_enrich, q33_se
 SMALL_SF = "/root/testdata/sf0.001"
 
 
-def _cleanup(spark, name):
-    for q in spark.streams.active:
-        q.stop()
-    spark.catalog.dropTempView(name) if name in [
-        t.name for t in spark.catalog.listTables()
-    ] else None
+def _run_to_memory(stream_df, name: str, output_mode: str):
+    """Run ``stream_df`` into the in-memory table ``name`` until its
+    current input is processed; returns the still-running query."""
+    q = (
+        stream_df.writeStream.outputMode(output_mode)
+        .format("memory")
+        .queryName(name)
+        .start()
+    )
+    q.processAllAvailable()
+    return q
 
 
 def test_hourly_rollup_parity(spark):
-    ev = st.read_events_stream(spark, SMALL_SF)
-    q = st.run_stream_to_memory(st.hourly_rollup_stream(ev), "hourly", "append")
+    ev = st.read_table_stream(spark, SMALL_SF, "events")
+    q = _run_to_memory(st.hourly_rollup_stream(ev), "hourly", "append")
     try:
         got = {
             (r["bucket_hour"], r["event_type"]): r["n_events"]
@@ -77,8 +86,8 @@ def test_session_window_parity(spark, tmp_path):
     stage = tmp_path / "events_stage"
     stage.mkdir()
     shutil.copy(f"{SMALL_SF}/events.parquet", stage / "events.parquet")
-    ev = st.read_events_stream(spark, str(stage))
-    q = st.run_stream_to_memory(
+    ev = st.read_table_stream(spark, str(stage), "events")
+    q = _run_to_memory(
         st.session_window_stream(ev), "sessions", "append"
     )
     import datetime as _dt
@@ -122,8 +131,8 @@ def test_session_window_parity(spark, tmp_path):
 
 
 def test_stateful_asof_parity(spark):
-    ev = st.read_events_stream(spark, SMALL_SF)
-    q = st.run_stream_to_memory(st.stateful_asof_stream(ev), "asof", "append")
+    ev = st.read_table_stream(spark, SMALL_SF, "events")
+    q = _run_to_memory(st.stateful_asof_stream(ev), "asof", "append")
     try:
         got = {
             r["event_id"]: r["prior_value"]
@@ -167,8 +176,8 @@ def test_stateful_asof_multichunk_out_of_order_parity(spark, tmp_path):
     old = spark.conf.get("spark.sql.execution.arrow.maxRecordsPerBatch")
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch", "7")
     try:
-        ev = st.read_events_stream(spark, str(stage))
-        q = st.run_stream_to_memory(
+        ev = st.read_table_stream(spark, str(stage), "events")
+        q = _run_to_memory(
             st.stateful_asof_stream(ev), "asof_shuf", "append"
         )
         try:
@@ -203,7 +212,7 @@ def test_jsonl_stream_tail(spark, tmp_path):
             f.write(json.dumps(r) + "\n")
     stream = st.read_rime_jsonl_stream(spark, str(d))
     counts = stream.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
-    q = st.run_stream_to_memory(counts, "tail", "complete")
+    q = _run_to_memory(counts, "tail", "complete")
     try:
         got = {r["event_type"]: r["n"] for r in spark.sql("SELECT * FROM tail").collect()}
         assert got == {"session_start": 1, "text_committed": 1, "session_end": 1}
@@ -229,7 +238,7 @@ def test_dedup_stream_parity(spark, tmp_path):
         .format("parquet")
         .load(src)
     )
-    q = st.run_stream_to_memory(st.dedup_stream(ev), "dedup_sink", "append")
+    q = _run_to_memory(st.dedup_stream(ev), "dedup_sink", "append")
     try:
         got = spark.table("dedup_sink").groupBy().count().collect()[0][0]
         dup_total = spark.read.parquet(src).count()
@@ -275,7 +284,7 @@ def test_dedup_admit_stream_parity(spark, tmp_path):
         .format("parquet")
         .load(str(src))
     )
-    q = st.run_stream_to_memory(
+    q = _run_to_memory(
         st.dedup_admit_stream(spark, stream, sf), "admit", "update"
     )
     try:
@@ -332,7 +341,7 @@ def test_dedup_admit_stream_unbounded_state(spark, tmp_path):
         .format("parquet")
         .load(str(src))
     )
-    q = st.run_stream_to_memory(
+    q = _run_to_memory(
         st.dedup_admit_stream(spark, stream, sf), "admit_multi", "update"
     )
     try:
@@ -402,7 +411,7 @@ def test_attribution_bucket_in_equality_key(spark):
     an availableNow backfill (twin.attribution_stream docstring). A
     refactor that drops the bucket keeps every test green (the pair
     set is unchanged) and silently reintroduces the quadratic."""
-    df = st.attribution_stream(st.read_events_stream(spark, SMALL_SF))
+    df = st.attribution_stream(st.read_table_stream(spark, SMALL_SF, "events"))
     analyzed = str(df._jdf.queryExecution().analyzed())
     join_lines = [ln for ln in analyzed.splitlines() if "Join Inner" in ln]
     assert join_lines, analyzed
@@ -417,8 +426,8 @@ def test_attribution_bucket_in_equality_key(spark):
 def test_attribution_stream_parity(spark):
     """Stream-stream interval join must produce exactly the batch
     join's (purchase, view-within-horizon) pair set."""
-    ev = st.read_events_stream(spark, SMALL_SF)
-    q = st.run_stream_to_memory(
+    ev = st.read_table_stream(spark, SMALL_SF, "events")
+    q = _run_to_memory(
         st.attribution_stream(ev), "attrib_sink", "append"
     )
     try:
@@ -458,75 +467,19 @@ def test_attribution_stream_parity(spark):
         q.stop()
 
 
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithState's state-server protocol needs the "
-    "protobuf package, absent in this container (no pip install); "
-    "the operator is correct API surface for protobuf-equipped "
-    "clusters",
-)
-def test_transform_with_state_matches_legacy_api(spark):
-    """The modern transformWithStateInPandas twin must produce exactly
-    the legacy applyInPandasWithState results (and thus the batch q09
-    oracle, by transitivity with test_stateful_asof_parity)."""
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass", None
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state."
-        "RocksDBStateStoreProvider",
-    )
-    try:
-        ev = st.read_events_stream(spark, SMALL_SF)
-        q = st.run_stream_to_memory(
-            st.stateful_asof_tws(ev), "asof_tws", "append"
-        )
-        try:
-            got = {
-                r["event_id"]: r["prior_value"]
-                for r in spark.sql("SELECT * FROM asof_tws").collect()
-            }
-            batch = {
-                r["event_id"]: r["prior_value"]
-                for r in q09_asof_enrich(spark, SMALL_SF).collect()
-            }
-            assert got == batch
-        finally:
-            q.stop()
-    finally:
-        if prev is not None:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", prev
-            )
-        else:
-            spark.conf.unset(
-                "spark.sql.streaming.stateStore.providerClass"
-            )
-
-
 def test_foreachbatch_parquet_idempotent(spark, tmp_path):
     """M7 sink: availableNow drain through foreachBatch lands every
     event exactly once; a re-drain from the same checkpoint (no new
     input) changes nothing."""
     out, chk = str(tmp_path / "out"), str(tmp_path / "chk")
     st.stream_to_parquet_foreachbatch(
-        st.read_events_stream(spark, SMALL_SF), out, chk
+        st.read_table_stream(spark, SMALL_SF, "events"), out, chk
     )
     n1 = spark.read.parquet(out).count()
     expected = spark.read.parquet(SMALL_SF + "/events.parquet").count()
     assert n1 == expected
     st.stream_to_parquet_foreachbatch(
-        st.read_events_stream(spark, SMALL_SF), out, chk
+        st.read_table_stream(spark, SMALL_SF, "events"), out, chk
     )
     assert spark.read.parquet(out).count() == n1
 
@@ -554,7 +507,7 @@ def test_stateful_page_rank_parity(spark, tmp_path):
     mapped.orderBy("event_id").coalesce(1).write.parquet(stage)
 
     stream = spark.readStream.schema(RIME_STREAM_SCHEMA).parquet(stage)
-    q = st.run_stream_to_memory(
+    q = _run_to_memory(
         st.stateful_page_rank_stream(stream), "page_rank", "append"
     )
     try:
@@ -594,7 +547,7 @@ def test_hourly_rollup_on_rocksdb_state_store(spark, sf_dir):
     import rime_wanxiang_logger_spark.streaming.twin as st
 
     def drain(name):
-        ev = st.read_events_stream(spark, sf_dir)
+        ev = st.read_table_stream(spark, sf_dir, "events")
         rolled = (
             ev.withColumn("ts", F.col("ts").cast("timestamp"))
             .groupBy(F.window("ts", "1 hour").alias("win"))
@@ -638,11 +591,8 @@ def test_attribution_join_on_rocksdb_state_store(spark):
     covers, and the layout the r10 bucketed equality key changed. The
     drained pair set must be identical under both providers."""
     def drain(name):
-        q = st.run_stream_to_memory(
-            st.attribution_stream(st.read_events_stream(spark, SMALL_SF)),
-            name,
-            "append",
-        )
+        ev = st.read_table_stream(spark, SMALL_SF, "events")
+        q = _run_to_memory(st.attribution_stream(ev), name, "append")
         try:
             return sorted(
                 (r["purchase_id"], r["view_ts"])
@@ -691,13 +641,13 @@ def test_checkpoint_resume_processes_only_new_files(spark, tmp_path):
     out, chk = str(tmp_path / "out"), str(tmp_path / "chk")
     stage_half(0, "events_a.parquet")
     st.stream_to_parquet_foreachbatch(
-        st.read_events_stream(spark, str(stage)), out, chk
+        st.read_table_stream(spark, str(stage), "events"), out, chk
     )
     n1 = spark.read.parquet(out).count()
     # second file arrives; SAME checkpoint → only the delta processed
     stage_half(1, "events_b.parquet")
     st.stream_to_parquet_foreachbatch(
-        st.read_events_stream(spark, str(stage)), out, chk
+        st.read_table_stream(spark, str(stage), "events"), out, chk
     )
     got = spark.read.parquet(out)
     total = ev.count()
@@ -741,10 +691,10 @@ def test_stateful_asof_multibatch_parity(spark, tmp_path):
     drain and the batch oracle, because the state's per-key last
     event_id spans batches and the files respect the sequence."""
     stage = _stage_events_split(spark, tmp_path)
-    ev = st.read_events_stream(
-        spark, stage, options={"maxFilesPerTrigger": "1"}
+    ev = st.read_table_stream(
+        spark, stage, "events", options={"maxFilesPerTrigger": "1"}
     )
-    q = st.run_stream_to_memory(
+    q = _run_to_memory(
         st.stateful_asof_stream(ev), "asof_mb", "append"
     )
     try:
@@ -771,11 +721,11 @@ def test_stateful_asof_sequence_guard_fires(spark, tmp_path):
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     stage = _stage_events_split(spark, tmp_path, reverse_mtime=True)
-    ev = st.read_events_stream(
-        spark, stage, options={"maxFilesPerTrigger": "1"}
+    ev = st.read_table_stream(
+        spark, stage, "events", options={"maxFilesPerTrigger": "1"}
     )
     with pytest.raises(StreamingQueryException) as exc:
-        st.run_stream_to_memory(
+        _run_to_memory(
             st.stateful_asof_stream(ev), "asof_guard", "append"
         )
     assert "sequence violated" in str(exc.value)
@@ -816,7 +766,7 @@ def test_stateful_page_rank_multibatch_parity(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(str(stage))
     )
-    q = st.run_stream_to_memory(
+    q = _run_to_memory(
         st.stateful_page_rank_stream(stream), "page_rank_mb", "append"
     )
     try:
@@ -882,7 +832,7 @@ def test_decontaminate_stream_parity(spark, tmp_path):
         .format("parquet")
         .load(str(src))
     )
-    q = st.run_stream_to_memory(
+    q = _run_to_memory(
         st.decontaminate_stream(spark, stream, sf), "decon", "update"
     )
     try:
@@ -902,8 +852,26 @@ def test_decontaminate_stream_parity(spark, tmp_path):
         q.stop()
 
 
+def _drain_confs(spark):
+    from rime_wanxiang_logger_spark.streaming.twin import (
+        _CHANGELOG_CONF,
+        _NODATA_CONF,
+        _PROVIDER_CONF,
+        _TRACKROWS_CONF,
+    )
+
+    width_key = "spark.sql.shuffle.partitions"
+    return {
+        width_key: spark.conf.get(width_key),
+        _PROVIDER_CONF: spark.conf.get(_PROVIDER_CONF),
+        _CHANGELOG_CONF: spark.conf.get(_CHANGELOG_CONF, "false"),
+        _NODATA_CONF: spark.conf.get(_NODATA_CONF, "true"),
+        _TRACKROWS_CONF: spark.conf.get(_TRACKROWS_CONF, "true"),
+    }
+
+
 def test_stream_state_width_scope_pins_and_restores_conf(spark):
-    """The drain scope (extensions._stream_state_width) must pin all
+    """The drain scope (twin._stream_state_width) must pin all
     five streaming confs — narrow state width, RocksDB provider,
     changelog checkpointing (r14: the measured ~3 s/bench commit-path
     win), no-data-batch suppression and row-tracking off (r15: the
@@ -911,7 +879,7 @@ def test_stream_state_width_scope_pins_and_restores_conf(spark):
     resurface as drain-wall drift) — and restore every one of them on
     exit, so the rest of a session keeps batch-width shuffles, the
     default provider, and production no-data-batch semantics."""
-    from rime_wanxiang_logger_spark.operators.extensions import (
+    from rime_wanxiang_logger_spark.streaming.twin import (
         _CHANGELOG_CONF,
         _NODATA_CONF,
         _PROVIDER_CONF,
@@ -922,18 +890,32 @@ def test_stream_state_width_scope_pins_and_restores_conf(spark):
     )
 
     width_key = "spark.sql.shuffle.partitions"
-    before = {
-        width_key: spark.conf.get(width_key),
-        _PROVIDER_CONF: spark.conf.get(_PROVIDER_CONF),
-        _CHANGELOG_CONF: spark.conf.get(_CHANGELOG_CONF, "false"),
-        _NODATA_CONF: spark.conf.get(_NODATA_CONF, "true"),
-        _TRACKROWS_CONF: spark.conf.get(_TRACKROWS_CONF, "true"),
-    }
+    before = _drain_confs(spark)
     with _stream_state_width(spark):
         assert spark.conf.get(width_key) == str(STREAM_STATE_PARTITIONS)
         assert spark.conf.get(_PROVIDER_CONF) == _ROCKSDB_PROVIDER
         assert spark.conf.get(_CHANGELOG_CONF) == "true"
         assert spark.conf.get(_NODATA_CONF) == "false"
         assert spark.conf.get(_TRACKROWS_CONF) == "false"
+    for k, v in before.items():
+        assert spark.conf.get(k, "sentinel-unset") == v, k
+
+
+def test_failing_drain_reraises_stops_and_restores_conf(spark, tmp_path):
+    """A drain whose stream fails (the sequence-guard setup of
+    test_stateful_asof_sequence_guard_fires) must re-raise the stream's
+    error, leave no active stream behind, and restore all five drain
+    confs."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    stage = _stage_events_split(spark, tmp_path, reverse_mtime=True)
+    ev = st.read_table_stream(
+        spark, stage, "events", options={"maxFilesPerTrigger": "1"}
+    )
+    before = _drain_confs(spark)
+    with pytest.raises(StreamingQueryException) as exc:
+        st.drain(st.stateful_asof_stream(ev), "asof_drain_guard", "append")
+    assert "sequence violated" in str(exc.value)
+    assert spark.streams.active == []
     for k, v in before.items():
         assert spark.conf.get(k, "sentinel-unset") == v, k
