@@ -38,15 +38,17 @@ q42_embedding_centroid  per-label centroid of the embedding column in
                       fixed-point mean per dimension.
 q43_stream_hourly     q13's hourly rollup executed through Structured
                       Streaming (availableNow trigger, complete-mode
-                      memory sink) — the batch/stream parity proof:
+                      parquet sink) — the batch/stream parity proof:
                       the streaming result hash-matches the same SQL
                       oracle as the batch plan.
 
 q43, q92, q100, q106, q107, q110 and q121 are the registered streaming
 drains: each builds its plan from the streaming/twin.py operators and
-runs it with one ``twin.drain`` call, which owns the trigger, the sink
-and the drain confs. twin.py is imported inside each wrapper because it
-imports ``operators.windows``; a module-level import would be circular.
+runs it with one ``twin.drain`` call, which owns the trigger, the
+drain confs and the one sink (``twin.stream_to_parquet_foreachbatch``
+into throwaway local dirs, read back lazily). twin.py is imported
+inside each wrapper because it imports ``operators.windows``; a
+module-level import would be circular.
 """
 
 from __future__ import annotations
@@ -499,7 +501,7 @@ def q42_embedding_centroid(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q43_stream_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """q13's hourly rollup executed as a Structured Streaming job:
     parquet file source → event-time tumbling window agg → complete-
-    mode memory sink, drained with trigger(availableNow). The returned
+    mode parquet sink, drained with trigger(availableNow). The returned
     DataFrame hash-matches the same DuckDB oracle as the batch q13 —
     batch/stream semantic parity, checked end to end.
 
@@ -533,8 +535,8 @@ def q92_dedup_admit(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The new-doc batch (doc_id % INCR_MOD == INCR_REM, q86's contract)
     streams from the documents parquet through the stream-static band
-    join against the standing corpus band table, drained into a
-    memory sink. The stream emits verdicts for COLLIDING docs only
+    join against the standing corpus band table, drained through the
+    parquet sink. The stream emits verdicts for COLLIDING docs only
     (silent docs are admitted), so the oracle is q86's SQL restricted
     to n_cand > 0, minus the derived is_unique flag.
 
@@ -560,7 +562,8 @@ def q121_decontaminate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     (vec_id % INCR_MOD == INCR_REM, q86's increment contract; eval
     rows excluded — they are index, not admits) stream through the
     stream-static band join against the STANDING eval posting index,
-    drained into a memory sink.
+    drained through the parquet sink. The twin builds that index and
+    the banding model itself.
 
     The stream emits verdicts for CONTAMINATED vectors only (silent
     vectors are admitted), so the oracle is q119's SQL restricted to
@@ -568,7 +571,6 @@ def q121_decontaminate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     the probe is banded with the very model the standing index was
     built with (twin docstring).
     """
-    from ..operators.similarity import banding_model, eval_band_index
     from ..streaming.twin import decontaminate_stream, drain, read_table_stream
 
     stream = (
@@ -586,35 +588,14 @@ def q121_decontaminate_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("v"),
         )
     )
-    # r12: the model is derived ONCE here and shared by the eval index
-    # and the probe (ADVICE r11 — the former inline build sized the
-    # corpus twice), and the eval index reads the ``banded_postings``
-    # stage pin batch-side (similarity.eval_band_index) so a sharing
-    # session bands the corpus once for q25/q119/q121 together; twin.py
-    # stays pin-free (the streaming audit rule — see STREAM_STATIC_AUDIT
-    # below).
-    # banding_model (r14): memo-reading handle — inside sharing
-    # the corpus-wide sizing pass runs once per session, not per
-    # q121 call (the model triple is deterministic per sf_dir).
-    model = banding_model(spark, sf_dir)
-    # DISK_ONLY: the eval index carries the vector payload — the
-    # banded_postings size class (r13 corpus-pin posture; heap bounded
-    # at any SF).
-    from pyspark import StorageLevel
-
-    eval_post = eval_band_index(spark, sf_dir, model=model).localCheckpoint(
-        storageLevel=StorageLevel.DISK_ONLY
-    )
-    verdicts = decontaminate_stream(
-        spark, stream, sf_dir, eval_post=eval_post, model=model
-    )
+    verdicts = decontaminate_stream(spark, stream, sf_dir)
     return drain(verdicts, "q121_decontaminate_stream_sink", "update")
 
 
 def q100_stream_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T1 sessionization executed through Structured Streaming —
-    ``F.session_window`` with the q33 gap, drained availableNow into a
-    complete-mode memory sink (the q43 registration pattern).
+    ``F.session_window`` with the q33 gap, drained availableNow through
+    the complete-mode parquet sink (the q43 registration pattern).
 
     q33 is the batch lag+cumsum formulation of the same sessions; this
     row certifies the STREAMING merge-on-overlap implementation against
@@ -722,7 +703,7 @@ def _q121_static_side(spark: SparkSession, sf_dir: str) -> DataFrame:
 #: stream-static join, PRE-checkpoint, so the pin's scan is visible
 #: to plans.broadcast_pin_scans. The audit builds this plan under
 #: stage_trace and applies the same no-broadcast rule every batch
-#: consumer gets; the wrapper itself then only adds the plan cut
+#: consumer gets; the twin then only adds the plan cut
 #: (localCheckpoint) and the watermarked stream side, neither of
 #: which can reintroduce a static broadcast of the pin scan.
 STREAM_STATIC_AUDIT = {

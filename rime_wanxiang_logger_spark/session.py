@@ -51,11 +51,6 @@ def get_spark(
         # keep it out of the repo tree.
         .config("spark.sql.warehouse.dir", "/tmp/rime_spark_warehouse")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
-        # Local-mode drains collect linear outputs to the driver (the
-        # memory-sink harness); at sf80 q107's 4M-row result is
-        # 1.17 GB serialized, over the 1 GB default. Static conf —
-        # must be set at context build, not via ensure_session_conf.
-        .config("spark.driver.maxResultSize", "4g")
         # see ensure_session_conf: demote 8–64 KB WSCG methods (which
         # HotSpot never JITs) to per-operator codegen
         .config("spark.sql.codegen.hugeMethodLimit", "8000")

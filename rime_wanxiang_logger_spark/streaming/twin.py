@@ -19,23 +19,32 @@ Spark Structured Streaming:
 - ``attribution_stream``: watermarked stream-stream interval join
   (purchase ← views within the preceding hour) — state bounded by the
   range condition, batch-parity tested
+- ``stream_to_parquet_foreachbatch``: the package's one streaming sink —
+  ``foreachBatch`` → parquet, idempotent under micro-batch replay
 - ``drain``: the one way the package runs a bounded stream — every
   registered streaming query (q43/q92/q100/q106/q107/q110/q121) is its
-  plan plus one ``drain`` call (availableNow into a memory sink, under
-  the drain confs below); ``stream_to_parquet_foreachbatch`` is the
-  idempotent production sink.
+  plan plus one ``drain`` call (availableNow through the parquet sink
+  into throwaway local dirs, under the drain confs below), returning a
+  lazy parquet read, so no drained row is held by the driver.
 
-At scale: file sources become Kafka; the state store becomes RocksDB
-(``spark.sql.streaming.stateStore.providerClass``); watermarks bound
-state size (SURVEY §7.3.6).
+Cluster boundary: ``drain`` runs bounded local backfills; a cluster job
+calls ``stream_to_parquet_foreachbatch`` itself with durable output and
+checkpoint dirs. At scale: file sources become Kafka; the state store
+is RocksDB (the drain confs already pin it); watermarks bound state
+size (SURVEY §7.3.6).
 
-Tests (tests/test_streaming.py) drive the same twins continuously into
+Tests (tests/test_streaming.py) also drive the twins continuously into
 a memory sink with ``processAllAvailable`` and assert batch/stream
 parity against the batch queries on the same data.
 """
 
 from __future__ import annotations
 
+import atexit
+import functools
+import os
+import shutil
+import tempfile
 from contextlib import contextmanager
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -46,6 +55,10 @@ from ..sources.readers import load_table, read_parquet
 from ..operators.windows import SESSION_GAP_SECONDS
 
 EVENTS_STREAM_SCHEMA = "event_id bigint, ts timestamp_ntz, user_id bigint, event_type string, value double, props string"
+
+#: Event-time watermark of every watermarked twin: how late a row may
+#: arrive and still count, and so how long windowed and dedup state lives.
+WATERMARK = "2 hours"
 
 
 def read_table_stream(
@@ -100,11 +113,11 @@ def read_rime_jsonl_stream(spark: SparkSession, path: str) -> DataFrame:
     )
 
 
-def hourly_rollup_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def hourly_rollup_stream(events: DataFrame) -> DataFrame:
     """Watermarked tumbling-window rollup (streaming twin of q13)."""
     return (
         events.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", WATERMARK)
         .groupBy(F.window("ts", "1 hour").alias("win"), "event_type")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select(
@@ -113,12 +126,12 @@ def hourly_rollup_stream(events: DataFrame, watermark: str = "2 hours") -> DataF
     )
 
 
-def session_window_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def session_window_stream(events: DataFrame) -> DataFrame:
     """T1 sessions via session_window(gap) — twin of batch q33."""
     gap = f"{SESSION_GAP_SECONDS} seconds"
     return (
         events.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", WATERMARK)
         .groupBy(F.session_window("ts", gap).alias("sw"), "user_id")
         .agg(F.count(F.lit(1)).alias("n_events"))
         .select("user_id", "n_events")
@@ -372,7 +385,7 @@ def stateful_page_rank_stream(events: DataFrame) -> DataFrame:
     )
 
 
-def dedup_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def dedup_stream(events: DataFrame) -> DataFrame:
     """Streaming exact dedup (T5 / q21's streaming twin): drop repeat
     deliveries of the same event within the watermark horizon via
     ``dropDuplicatesWithinWatermark`` — state holds only event ids seen
@@ -381,7 +394,7 @@ def dedup_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
     exactly-once repair stage in front of every downstream aggregate."""
     return (
         events.withColumn("ts", F.col("ts").cast("timestamp"))
-        .withWatermark("ts", watermark)
+        .withWatermark("ts", WATERMARK)
         .dropDuplicatesWithinWatermark(["event_id"])
     )
 
@@ -394,16 +407,10 @@ def dedup_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
 #: clock source changes, the state shapes below are identical.
 ADMIT_EPOCH_S = 1704067200
 ADMIT_TS_EXPR = f"timestamp_seconds({ADMIT_EPOCH_S} + doc_id)"
-ADMIT_WATERMARK = "2 hours"
 ADMIT_WINDOW = "1 hour"
 
 
-def dedup_admit_stream(
-    spark,
-    new_docs: DataFrame,
-    sf_dir: str,
-    watermark: str = ADMIT_WATERMARK,
-) -> DataFrame:
+def dedup_admit_stream(spark, new_docs: DataFrame, sf_dir: str) -> DataFrame:
     """q86's incremental-dedup admit pass on an UNBOUNDED new-doc
     stream: per arriving document, its band-collision partner count
     against the standing corpus and the admit verdict.
@@ -444,14 +451,12 @@ def dedup_admit_stream(
     # PIN the standing band table (q86 pins its signature table the
     # same way). A stream-static join re-evaluates the static side
     # EVERY micro-batch, and unpinned that means re-running the
-    # corpus-wide MinHash signature pass per batch — at the stream's
-    # narrow state width, since the static subplan inherits the
-    # stream's shuffle-partitions setting. The r8 sf5 sweep measured
-    # the compound: 11.2 s → 253.3 s for 5× data (22.6×). Eager so the
-    # materialization happens NOW, at the caller's full batch width,
-    # not lazily inside the width-8 stream scope. In production this
-    # is the nightly-refreshed persisted band table (docstring above);
-    # the pin is that table's session-local stand-in.
+    # corpus-wide MinHash signature pass per batch (the r8 sf5 sweep:
+    # 11.2 s → 253.3 s for 5× data).
+    # Eager so the materialization happens once, NOW, before the
+    # stream starts. In production this is the nightly-refreshed
+    # persisted band table (docstring above); the pin is that table's
+    # session-local stand-in.
     # DISK_ONLY (r14): corpus-proportional checkpoint — the r13
     # corpus-pin posture (_stage_cache._ckpt_level) applied to the
     # standing table; serialized UnsafeRows bound the heap at any SF
@@ -474,7 +479,7 @@ def dedup_admit_stream(
             F.col("c.doc_id").alias("partner"),
         )
         .withColumn("admit_ts", F.expr(ADMIT_TS_EXPR))
-        .withWatermark("admit_ts", watermark)
+        .withWatermark("admit_ts", WATERMARK)
         .dropDuplicatesWithinWatermark(["doc_id", "partner"])
     )
     return (
@@ -495,14 +500,7 @@ def dedup_admit_stream(
 VEC_ADMIT_TS_EXPR = f"timestamp_seconds({ADMIT_EPOCH_S} + vec_id)"
 
 
-def decontaminate_stream(
-    spark,
-    new_vecs: DataFrame,
-    sf_dir: str,
-    watermark: str = ADMIT_WATERMARK,
-    eval_post: DataFrame | None = None,
-    model: tuple | None = None,
-) -> DataFrame:
+def decontaminate_stream(spark, new_vecs: DataFrame, sf_dir: str) -> DataFrame:
     """q119's semantic decontamination on an UNBOUNDED new-vector
     stream: per arriving embedding, its cosine hits against the
     STANDING eval-vector band index and the contamination verdict —
@@ -535,14 +533,13 @@ def decontaminate_stream(
     construction). The probe's per-batch work is |batch| × bands
     postings joined against eval buckets only.
 
-    ``eval_post`` / ``model`` (r12): the q121 wrapper passes the
-    materialized eval index (similarity.eval_band_index — batch-side
-    so the stage pin it reads stays out of the streaming plane's
-    pin-free closure) and the banding model it was derived with, so
-    the corpus-wide sizing pass runs ONCE per drain (ADVICE r11: the
-    former inline build ran it twice — once inside neardup_banded for
-    the index, once here for the probe). Defaults rebuild both
-    in-place, pin-free, for direct callers.
+    The static side is built here, once per call: one banding model
+    (``similarity.banding_model`` — memoized per session under
+    sharing) bands both the probe and the eval index, and the index
+    comes from ``similarity.eval_band_index``, which reads the
+    ``banded_postings`` stage pin batch-side, so this module keeps no
+    direct pin call site (the q121 wrapper's STREAM_STATIC_AUDIT hook
+    audits that plan).
     """
     from ..operators.similarity import (
         NEARDUP_THRESHOLD,
@@ -553,23 +550,19 @@ def decontaminate_stream(
         eval_band_index,
     )
 
-    if model is None:
-        model = banding_model(spark, sf_dir)
-    if eval_post is None:
-        # PIN the standing eval band index (the dedup_admit_stream
-        # rule: a stream-static join re-evaluates the static side
-        # EVERY micro-batch — unpinned, that is the corpus-wide
-        # banding pass per batch). Eager, at the caller's full batch
-        # width. In production this is the persisted benchmark index;
-        # the pin is its session-local stand-in.
-        eval_post = eval_band_index(spark, sf_dir, model=model)
-        # DISK_ONLY: the eval index carries the vector payload — the
-        # banded_postings size class (see the corpus_bands note above).
-        from pyspark import StorageLevel
+    from pyspark import StorageLevel
 
-        eval_post = eval_post.localCheckpoint(
-            storageLevel=StorageLevel.DISK_ONLY
-        )
+    model = banding_model(spark, sf_dir)
+    # PIN the standing eval band index (the dedup_admit_stream rule: a
+    # stream-static join re-evaluates the static side EVERY micro-batch
+    # — unpinned, that is the corpus-wide banding pass per batch).
+    # Eager, before the stream starts. DISK_ONLY: the index carries the
+    # vector payload — the banded_postings size class. In production
+    # this is the persisted benchmark index; the pin is its
+    # session-local stand-in.
+    eval_post = eval_band_index(spark, sf_dir, model=model).localCheckpoint(
+        storageLevel=StorageLevel.DISK_ONLY
+    )
     planes, need_bits, ext_bits = model
     probe = (
         _band_postings(new_vecs, planes, need_bits, ext_bits, with_vec=True)
@@ -584,7 +577,7 @@ def decontaminate_stream(
         )
         .where(F.col("cosine") >= NEARDUP_THRESHOLD)
         .withColumn("admit_ts", F.expr(VEC_ADMIT_TS_EXPR))
-        .withWatermark("admit_ts", watermark)
+        .withWatermark("admit_ts", WATERMARK)
         .dropDuplicatesWithinWatermark(["vec_id", "eval_id"])
     )
     return (
@@ -603,7 +596,7 @@ ATTRIBUTION_HORIZON = "1 hour"
 ATTRIBUTION_HORIZON_S = 3600
 
 
-def attribution_stream(events: DataFrame, watermark: str = "2 hours") -> DataFrame:
+def attribution_stream(events: DataFrame) -> DataFrame:
     """Stream-stream interval join: every purchase paired with the same
     user's views in the preceding ATTRIBUTION_HORIZON.
 
@@ -639,7 +632,7 @@ def attribution_stream(events: DataFrame, watermark: str = "2 hours") -> DataFra
             F.col("ts").alias("view_ts"),
             F.col("value").alias("view_value"),
         )
-        .withWatermark("view_ts", watermark)
+        .withWatermark("view_ts", WATERMARK)
         .withColumn("v_bucket", bucket("view_ts"))
     )
     purchases = (
@@ -650,7 +643,7 @@ def attribution_stream(events: DataFrame, watermark: str = "2 hours") -> DataFra
             F.col("ts").alias("purchase_ts"),
             F.col("value").alias("purchase_value"),
         )
-        .withWatermark("purchase_ts", watermark)
+        .withWatermark("purchase_ts", WATERMARK)
         .withColumn(
             "p_bucket",
             F.explode(
@@ -681,18 +674,28 @@ def attribution_stream(events: DataFrame, watermark: str = "2 hours") -> DataFra
 
 
 def stream_to_parquet_foreachbatch(
-    stream_df: DataFrame, out_dir: str, checkpoint_dir: str
+    stream_df: DataFrame, out_dir: str, checkpoint_dir: str, output_mode: str
 ) -> None:
-    """M7 production sink: ``foreachBatch`` → parquet, idempotent under
-    micro-batch replay. Each batch lands in its own ``_batch_id=N``
-    partition with dynamic partition overwrite, so a batch replayed
-    after a failure between the write and the checkpoint commit
-    overwrites itself instead of duplicating — effective exactly-once
-    on top of foreachBatch's at-least-once contract. Drains with
-    ``availableNow`` (bounded run; the same code runs continuously in
-    production)."""
+    """The package's one streaming sink (M7): ``foreachBatch`` →
+    parquet in ``output_mode``, run with ``trigger(availableNow=True)``
+    and idempotent under micro-batch replay.
+
+    In append and update mode each batch lands in its own
+    ``_batch_id=N`` partition with dynamic partition overwrite, so a
+    batch replayed after a failure between the write and the checkpoint
+    commit overwrites itself instead of duplicating — effective
+    exactly-once on top of foreachBatch's at-least-once contract. In
+    complete mode every batch is the full result table, so it
+    overwrites the whole output and the last batch is the result.
+
+    A stream that fails re-raises here, stopped. ``drain`` calls this
+    with throwaway local dirs for bounded backfills; a cluster job
+    calls it with durable ``out_dir`` and ``checkpoint_dir``."""
 
     def _write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        if output_mode == "complete":
+            batch_df.write.mode("overwrite").parquet(out_dir)
+            return
         (
             batch_df.withColumn("_batch_id", F.lit(batch_id))
             .write.mode("overwrite")
@@ -703,23 +706,17 @@ def stream_to_parquet_foreachbatch(
 
     q = (
         stream_df.writeStream.foreachBatch(_write_batch)
+        .outputMode(output_mode)
         .option("checkpointLocation", checkpoint_dir)
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination()
+    try:
+        q.awaitTermination()
+    except BaseException:
+        q.stop()
+        raise
 
-
-#: State-store partition width for every drain. A streaming query's
-#: shuffle width is a DEPLOYMENT knob, not a semantic one: it fixes the
-#: number of state-store instances at the first checkpoint, and every
-#: micro-batch pays a per-partition state commit regardless of data
-#: volume (measured locally: the q106 interval join costs 12.7/7.4/4.1 s
-#: at 32/16/8 partitions for the SAME 342 rows — pure fixed cost).
-#: Production sizes this to state volume and throughput per the
-#: checkpoint; the drained results are partition-count-invariant
-#: (driver-certified either way).
-STREAM_STATE_PARTITIONS = 8
 
 #: RocksDB state store for every drain (r10). The default HDFS-backed
 #: provider keeps ALL state as JVM-heap objects; an availableNow
@@ -743,13 +740,13 @@ _PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 
 #: Changelog checkpointing for the RocksDB stores (r14, measured
 #: per-drain). Default (false) uploads a FULL RocksDB snapshot per
-#: store per commit — ~40 store instances across a drain's stateful
-#: operators at STREAM_STATE_PARTITIONS=8, a pure fixed cost per
-#: micro-batch. Changelog mode appends only the batch's state DELTA at
-#: commit and leaves snapshot consolidation to the background
-#: maintenance thread — the documented low-commit-latency RocksDB
-#: posture, and the right one at ANY state size (the delta is bounded
-#: by the batch's writes, never the standing state). Measured at sf0.1
+#: store per commit — one store instance per shuffle partition per
+#: stateful operator, a pure fixed cost per micro-batch. Changelog
+#: mode appends only the batch's state DELTA at commit and leaves
+#: snapshot consolidation to the background maintenance thread — the
+#: documented low-commit-latency RocksDB posture, and the right one at
+#: ANY state size (the delta is bounded by the batch's writes, never
+#: the standing state). Measured at sf0.1
 #: (best-of-2 per drain): q92 3.41→2.35, q110 2.77→2.17, q106
 #: 3.21→2.72, q100 1.43→1.14, q121 4.06→3.73, q107 2.09→1.99 — ~3 s
 #: across the seven drains, identical drained results.
@@ -788,12 +785,13 @@ _TRACKROWS_CONF = (
 
 #: (conf key, pinned value, default-when-unset) — every drain conf in
 #: one place so the scope and its pin/restore test cannot drift apart.
-#: The explicit fallbacks are for confs that, unlike providerClass and
-#: the shuffle width, have no retrievable default on a vanilla session
-#: (conf.get throws; passing None would later restore a null —
-#: measured: IllegalArgumentException on exit in a vanilla session).
+#: The explicit fallbacks are for confs that, unlike providerClass, have
+#: no retrievable default on a vanilla session (conf.get throws; passing
+#: None would later restore a null — measured: IllegalArgumentException
+#: on exit in a vanilla session). The shuffle width is deliberately not
+#: here: drains run at the session's width, the deployment setting every
+#: batch plan uses, and drained results do not depend on it.
 _DRAIN_CONFS: tuple[tuple[str, str, str | None], ...] = (
-    ("spark.sql.shuffle.partitions", str(STREAM_STATE_PARTITIONS), None),
     (_PROVIDER_CONF, _ROCKSDB_PROVIDER, None),
     (_CHANGELOG_CONF, "true", "false"),
     (_NODATA_CONF, "false", "true"),
@@ -802,11 +800,11 @@ _DRAIN_CONFS: tuple[tuple[str, str, str | None], ...] = (
 
 
 @contextmanager
-def _stream_state_width(spark: SparkSession):
+def _drain_scope(spark: SparkSession):
     """Pin the drain confs for the duration of a stream run and restore
     them afterwards, also when the run raises (the rest of a session
-    keeps batch-width shuffles, the default provider and production
-    no-data-batch semantics)."""
+    keeps the default provider and production no-data-batch
+    semantics)."""
     old = {
         key: spark.conf.get(key) if default is None else spark.conf.get(key, default)
         for key, _, default in _DRAIN_CONFS
@@ -820,29 +818,40 @@ def _stream_state_width(spark: SparkSession):
             spark.conf.set(key, value)
 
 
-def drain(stream_df: DataFrame, name: str, output_mode: str) -> DataFrame:
-    """Run the bounded stream ``stream_df`` to completion and return its
-    result: ``trigger(availableNow=True)`` into the memory sink
-    ``name`` in ``output_mode``, then ``spark.table(name)``.
+@functools.cache
+def _drain_root() -> str:
+    """One temp root per process for every drain's output and
+    checkpoint, removed when the process exits."""
+    root = tempfile.mkdtemp(prefix="rime_drains_")
+    atexit.register(shutil.rmtree, root, ignore_errors=True)
+    return root
 
-    Only ``start()`` and ``awaitTermination()`` run under the drain
-    confs: the state-store width and provider are fixed at stream
-    start, while the caller's plan — including any eager pin of a
-    stream-static join's static side — is built at the session's full
-    batch width. A stream that fails re-raises here, stopped, with the
-    confs restored."""
+
+def drain(stream_df: DataFrame, name: str, output_mode: str) -> DataFrame:
+    """Run the bounded stream ``stream_df`` to completion through
+    :func:`stream_to_parquet_foreachbatch` in ``output_mode`` and return
+    its result as a lazy parquet read with the stream's columns.
+
+    Each call gets a fresh output and checkpoint dir (prefixed ``name``)
+    under the per-process temp root, so two drains of the same name keep
+    their own rows, and the driver never holds drained rows. A run with
+    no batches reads as an empty frame. The read carries the stream's
+    schema, so nothing is inferred; Spark still appends the sink's
+    ``_batch_id`` partition column, which the projection drops.
+
+    Only the sink runs under the drain confs: the state-store provider
+    is fixed at stream start, while the caller's plan — including any
+    eager pin of a stream-static join's static side — is built under
+    the session's own confs. A stream that fails re-raises here,
+    stopped, with the confs restored."""
     spark = stream_df.sparkSession
-    writer = (
-        stream_df.writeStream.format("memory")
-        .queryName(name)
-        .outputMode(output_mode)
-        .trigger(availableNow=True)
+    run = tempfile.mkdtemp(prefix=f"{name}_", dir=_drain_root())
+    out = os.path.join(run, "out")
+    os.mkdir(out)
+    with _drain_scope(spark):
+        stream_to_parquet_foreachbatch(
+            stream_df, out, os.path.join(run, "checkpoint"), output_mode
+        )
+    return spark.read.schema(stream_df.schema).parquet(out).select(
+        *stream_df.columns
     )
-    with _stream_state_width(spark):
-        q = writer.start()
-        try:
-            q.awaitTermination()
-        except BaseException:
-            q.stop()
-            raise
-    return spark.table(name)

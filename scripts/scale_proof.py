@@ -14,11 +14,14 @@ Writes scale_proof.json next to this script.
 
 When /tmp/sf80 exists (the FOURTH_POINT decade), run with
 SPARK_DRIVER_MEMORY=16g: the 8 GB default heap OOM-killed a
-dispatcher-event-loop thread during q107's sf80 drain (4M-row
-memory-sink collect + accumulated sink tables), and a dead dispatcher
-WEDGES the local scheduler — the job waits forever instead of
-failing (r10; same non-failing hang class as the state-store abort
-deadlock, see the RocksDB note above streaming/twin.drain).
+dispatcher-event-loop thread during q107's sf80 drain, and a dead
+dispatcher WEDGES the local scheduler — the job waits forever instead
+of failing (r10; same non-failing hang class as the state-store abort
+deadlock, see the RocksDB note above streaming/twin.drain). The cause
+then blamed, the memory sink's 4M-row collect to the driver, is gone:
+drains now write through the parquet sink and the driver holds no
+drained rows. The 16g instruction stays until an sf80 run shows 8g
+is enough.
 """
 
 from __future__ import annotations

@@ -44,27 +44,24 @@ def test_bench_trace_verdict():
 
 
 def test_streams_start_only_in_twin_drain_paths():
-    # one drain path: every registered stream runs through twin.drain,
-    # and the only other stream start in the package is the production
-    # foreachBatch sink next to it
+    # one sink: every registered stream runs through twin.drain, which
+    # writes through stream_to_parquet_foreachbatch — the package's only
+    # stream start — and no driver-resident memory sink is left
     import ast
 
     pkg = Path(ops.__file__).parent.parent
     twin = pkg / "streaming" / "twin.py"
-    elsewhere = [
-        str(p.relative_to(pkg))
-        for p in sorted(pkg.rglob("*.py"))
-        if p != twin and ".writeStream" in p.read_text()
-    ]
-    assert elsewhere == []
-    src = twin.read_text()
+    srcs = {p: p.read_text() for p in sorted(pkg.rglob("*.py"))}
+    rel = lambda ps: [str(p.relative_to(pkg)) for p in ps]  # noqa: E731
+    assert rel(p for p, s in srcs.items() if p != twin and ".writeStream" in s) == []
+    assert rel(p for p, s in srcs.items() if 'format("memory")' in s) == []
+    src = srcs[twin]
     per_def = {
         node.name: ast.get_source_segment(src, node).count(".writeStream")
         for node in ast.parse(src).body
         if isinstance(node, ast.FunctionDef)
     }
     assert {k: n for k, n in per_def.items() if n} == {
-        "drain": 1,
         "stream_to_parquet_foreachbatch": 1,
     }
-    assert src.count(".writeStream") == 2
+    assert src.count(".writeStream") == 1

@@ -7,7 +7,9 @@ streaming plane. The harness (``_run_to_memory``) runs the stream with
 the default continuous trigger and ``processAllAvailable``, so
 watermarks advance through no-data batches and a test can append input
 and process again; the registered queries' ``twin.drain`` turns both
-off, and its own scope and failure path are tested at the end.
+off and writes through the one parquet sink
+(``stream_to_parquet_foreachbatch``). The sink, ``drain``, its conf
+scope and its failure path are tested at the end.
 """
 
 from __future__ import annotations
@@ -473,13 +475,13 @@ def test_foreachbatch_parquet_idempotent(spark, tmp_path):
     input) changes nothing."""
     out, chk = str(tmp_path / "out"), str(tmp_path / "chk")
     st.stream_to_parquet_foreachbatch(
-        st.read_table_stream(spark, SMALL_SF, "events"), out, chk
+        st.read_table_stream(spark, SMALL_SF, "events"), out, chk, "append"
     )
     n1 = spark.read.parquet(out).count()
     expected = spark.read.parquet(SMALL_SF + "/events.parquet").count()
     assert n1 == expected
     st.stream_to_parquet_foreachbatch(
-        st.read_table_stream(spark, SMALL_SF, "events"), out, chk
+        st.read_table_stream(spark, SMALL_SF, "events"), out, chk, "append"
     )
     assert spark.read.parquet(out).count() == n1
 
@@ -641,13 +643,13 @@ def test_checkpoint_resume_processes_only_new_files(spark, tmp_path):
     out, chk = str(tmp_path / "out"), str(tmp_path / "chk")
     stage_half(0, "events_a.parquet")
     st.stream_to_parquet_foreachbatch(
-        st.read_table_stream(spark, str(stage), "events"), out, chk
+        st.read_table_stream(spark, str(stage), "events"), out, chk, "append"
     )
     n1 = spark.read.parquet(out).count()
     # second file arrives; SAME checkpoint → only the delta processed
     stage_half(1, "events_b.parquet")
     st.stream_to_parquet_foreachbatch(
-        st.read_table_stream(spark, str(stage), "events"), out, chk
+        st.read_table_stream(spark, str(stage), "events"), out, chk, "append"
     )
     got = spark.read.parquet(out)
     total = ev.count()
@@ -871,28 +873,31 @@ def _drain_confs(spark):
 
 
 def test_stream_state_width_scope_pins_and_restores_conf(spark):
-    """The drain scope (twin._stream_state_width) must pin all
-    five streaming confs — narrow state width, RocksDB provider,
-    changelog checkpointing (r14: the measured ~3 s/bench commit-path
-    win), no-data-batch suppression and row-tracking off (r15: the
-    measured 12.76 → 10.57 s drain-sum win; a silent revert would only
-    resurface as drain-wall drift) — and restore every one of them on
-    exit, so the rest of a session keeps batch-width shuffles, the
-    default provider, and production no-data-batch semantics."""
+    """The drain scope (twin._drain_scope) must pin all four streaming
+    confs — RocksDB provider, changelog checkpointing (r14: the
+    measured ~3 s/bench commit-path win), no-data-batch suppression and
+    row-tracking off (r15: the measured 12.76 → 10.57 s drain-sum win;
+    a silent revert would only resurface as drain-wall drift) — and
+    restore every one of them on exit, so the rest of a session keeps
+    the default provider and production no-data-batch semantics. It
+    sets no width: drains run at the session's shuffle width."""
     from rime_wanxiang_logger_spark.streaming.twin import (
         _CHANGELOG_CONF,
+        _DRAIN_CONFS,
         _NODATA_CONF,
         _PROVIDER_CONF,
         _ROCKSDB_PROVIDER,
         _TRACKROWS_CONF,
-        STREAM_STATE_PARTITIONS,
-        _stream_state_width,
+        _drain_scope,
     )
 
     width_key = "spark.sql.shuffle.partitions"
+    assert {k for k, _, _ in _DRAIN_CONFS} == {
+        _PROVIDER_CONF, _CHANGELOG_CONF, _NODATA_CONF, _TRACKROWS_CONF,
+    }
     before = _drain_confs(spark)
-    with _stream_state_width(spark):
-        assert spark.conf.get(width_key) == str(STREAM_STATE_PARTITIONS)
+    with _drain_scope(spark):
+        assert spark.conf.get(width_key) == before[width_key]
         assert spark.conf.get(_PROVIDER_CONF) == _ROCKSDB_PROVIDER
         assert spark.conf.get(_CHANGELOG_CONF) == "true"
         assert spark.conf.get(_NODATA_CONF) == "false"
@@ -904,8 +909,8 @@ def test_stream_state_width_scope_pins_and_restores_conf(spark):
 def test_failing_drain_reraises_stops_and_restores_conf(spark, tmp_path):
     """A drain whose stream fails (the sequence-guard setup of
     test_stateful_asof_sequence_guard_fires) must re-raise the stream's
-    error, leave no active stream behind, and restore all five drain
-    confs."""
+    error, leave no active stream behind, restore all four drain confs
+    and leave the session's shuffle width as it was."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     stage = _stage_events_split(spark, tmp_path, reverse_mtime=True)
@@ -919,3 +924,96 @@ def test_failing_drain_reraises_stops_and_restores_conf(spark, tmp_path):
     assert spark.streams.active == []
     for k, v in before.items():
         assert spark.conf.get(k, "sentinel-unset") == v, k
+
+
+def _drain_commits(name):
+    """Committed micro-batch ids of every ``drain`` run named ``name``
+    in this process (the checkpoint's ``commits`` log)."""
+    import glob
+
+    from rime_wanxiang_logger_spark.streaming.twin import _drain_root
+
+    pattern = os.path.join(_drain_root(), f"{name}_*", "checkpoint", "commits", "*")
+    return sorted(
+        int(os.path.basename(p)) for p in glob.glob(pattern)
+        if os.path.basename(p).isdigit()
+    )
+
+
+def test_complete_mode_drain_returns_only_final_table(spark, tmp_path):
+    """A complete-mode drain over 3 micro-batches: every batch re-emits
+    the whole (growing) table, and the drain must return only the last
+    one — equal to the batch rollup — not the union of the three
+    snapshots (the memory sink kept only the last batch too)."""
+    from rime_wanxiang_logger_spark.sources.readers import load_table
+
+    stage = _stage_events_split(spark, tmp_path)
+    ev = st.read_table_stream(
+        spark, stage, "events", options={"maxFilesPerTrigger": "1"}
+    )
+    rolled = (
+        ev.groupBy(F.date_trunc("hour", "ts").alias("h"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+    )
+    got = st.drain(rolled, "complete_mb", "complete").collect()
+    assert _drain_commits("complete_mb") == [0, 1, 2]
+    want = (
+        load_table(spark, SMALL_SF, "events")
+        .groupBy(F.date_trunc("hour", "ts").alias("h"), "event_type")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .collect()
+    )
+    assert len(got) == len(want)
+    assert {tuple(r) for r in got} == {tuple(r) for r in want}
+
+
+def test_drain_of_no_files_is_empty_with_stream_columns(spark):
+    """A source that matches no files runs no batch; the drain still
+    returns a frame with the stream's columns and no rows."""
+    ev = (
+        spark.readStream.schema(st.EVENTS_STREAM_SCHEMA)
+        .option("pathGlobFilter", "no_such_table*.parquet")
+        .parquet(SMALL_SF)
+    )
+    stream = st.stateful_asof_stream(ev)
+    got = st.drain(stream, "empty_drain", "append")
+    assert got.columns == stream.columns
+    assert got.count() == 0
+
+
+def test_same_name_drains_keep_their_own_rows(spark):
+    """Two drains with the same ``name`` in one session write to their
+    own dirs, so each returned frame keeps its own rows."""
+    ev = st.read_table_stream(spark, SMALL_SF, "events")
+    even = st.drain(ev.where(F.col("event_id") % 2 == 0), "same_name", "append")
+    odd = st.drain(ev.where(F.col("event_id") % 2 == 1), "same_name", "append")
+    even_ids = {r[0] for r in even.select("event_id").collect()}
+    odd_ids = {r[0] for r in odd.select("event_id").collect()}
+    assert even_ids and odd_ids
+    assert all(i % 2 == 0 for i in even_ids)
+    assert all(i % 2 == 1 for i in odd_ids)
+    total = spark.read.parquet(f"{SMALL_SF}/events.parquet").count()
+    assert len(even_ids) + len(odd_ids) == total
+
+
+def test_registered_drains_return_parquet_scans(spark):
+    """Every registered drain returns a lazy read of the parquet sink's
+    files, never driver-resident rows: the executed plan scans parquet
+    and has no LocalTableScan."""
+    import inspect
+
+    from rime_wanxiang_logger_spark.operators import all_queries
+
+    drains = {
+        n: fn for n, fn in all_queries().items()
+        if re.search(r"\bdrain\(", inspect.getsource(fn))
+    }
+    assert set(drains) == {
+        "q43_stream_hourly", "q92_dedup_admit", "q100_stream_sessions",
+        "q106_stream_attribution", "q107_stateful_asof",
+        "q110_stream_page_rank", "q121_decontaminate_stream",
+    }
+    for name, fn in sorted(drains.items()):
+        plan = fn(spark, SMALL_SF)._jdf.queryExecution().executedPlan().toString()
+        assert "FileScan parquet" in plan, (name, plan)
+        assert "LocalTableScan" not in plan, (name, plan)
