@@ -28,14 +28,13 @@ def _cpu_probe() -> float:
     """Seconds for a fixed 10^7-iteration single-thread loop — the
     host-speed calibration constant stamped into bench_full.json.
 
-    r15 measurement fix (declared in OPTIMIZATION_r15.md): a short
-    untimed spin first. Probes on an IDLE package read ~2x slower than
-    the same loop seconds later on a busy one (measured back-to-back:
-    0.88-1.18 s idle vs 0.38-0.58 s in-bench — C-state exit /
-    frequency-ramp latency, not co-tenancy), so the probes bracketing
-    the timed passes (package briefly idle) spuriously inflated the
-    trace ratio — the r15 mid-round pass flagged itself on a 0.605 s
-    FIRST probe against an 0.376 s mid-run min with zero ambient
+    A short untimed spin runs first. Probes on an IDLE package read ~2x
+    slower than the same loop seconds later on a busy one (measured
+    back-to-back: 0.88-1.18 s idle vs 0.38-0.58 s in-bench — C-state
+    exit / frequency-ramp latency, not co-tenancy), so the probes
+    bracketing the timed passes (package briefly idle) spuriously
+    inflated the trace ratio: one pass flagged itself on a 0.605 s
+    first probe against an 0.376 s mid-run min with zero ambient
     change. The warm-up spin makes every probe measure what the trace
     exists to detect — co-tenant throttling — independent of package
     sleep state at the probe instant."""

@@ -14,6 +14,17 @@ every setting is also the right *shape* for a real cluster:
   table stores TIMESTAMP(NANOS) which Spark's vectorized parquet reader
   rejects; we read nanos as long and convert in the source layer
   (sources/readers.py) — a reader shim, not a data rewrite.
+- ``spark.sql.codegen.cache.maxEntries=4096``: Spark keeps compiled
+  Janino classes in one JVM-wide cache, sized once, when the JVM first
+  generates code. Its default of 100 entries (4 Guava segments of 25)
+  is smaller than one pass of the report chain or the curation chain
+  (~115 classes each), so every recurring pass evicted in a cycle and
+  recompiled ~100 classes, each then running as fresh, un-JITted code. The full 122-query
+  registry generates ~1730 distinct classes at sf0.01; 4096 (1024 per
+  segment) holds that with room for larger plans. Bound: the classes
+  live in metaspace, ~217 MB with the whole registry cached against
+  ~204 MB at 100 entries. It is a static conf: only ``get_spark`` can
+  set it, and only if no session in the JVM has generated code yet.
 """
 
 from __future__ import annotations
@@ -54,6 +65,10 @@ def get_spark(
         # see ensure_session_conf: demote 8–64 KB WSCG methods (which
         # HotSpot never JITs) to per-operator codegen
         .config("spark.sql.codegen.hugeMethodLimit", "8000")
+        # JVM-wide generated-class cache (static, fixed at the first
+        # codegen): ~1730 distinct classes for the 122-query registry at
+        # sf0.01, so Spark's 100 entries recompile every recurring query
+        .config("spark.sql.codegen.cache.maxEntries", "4096")
     )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
@@ -64,7 +79,14 @@ def get_spark(
 
 def ensure_session_conf(spark: SparkSession) -> SparkSession:
     """Apply the runtime-settable engine conf to an externally created
-    session (the driver harness builds its own SparkSession)."""
+    session (the driver harness builds its own SparkSession).
+
+    Static confs cannot follow: Spark rejects a runtime set of them. So
+    a session that ``get_spark`` did not build keeps Spark's 100-entry
+    generated-class cache (``spark.sql.codegen.cache.maxEntries``, see
+    the module docstring), and recurring queries there recompile their
+    classes. That cache is JVM-wide and sized at the JVM's first codegen,
+    so no later call can resize it; the builder is the only place."""
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     spark.conf.set("spark.sql.adaptive.enabled", "true")
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -213,6 +213,66 @@ def test_session_conf_jit_compilable_codegen(spark):
     assert spark.conf.get("spark.sql.codegen.hugeMethodLimit") == "8000"
 
 
+def _write_rime_log(path, n: int) -> None:
+    """A seeded Rime log of key events and commits, one session per 50
+    lines, with a truncated line every 97th."""
+    import json
+    import random
+
+    rng = random.Random(7)
+    with open(path, "w") as f:
+        for i in range(n):
+            ts = f"2026-08-13T01:{i // 60 % 60:02d}:{i % 60:02d}.{i % 1000:03d}Z"
+            if i % 50 == 0:
+                ev = {"event_type": "session_start", "timestamp": ts}
+            elif i % 3:
+                cands = rng.sample("你好世界中文的了是我", 4)
+                ev = {"event_type": "input_state_changed", "timestamp": ts,
+                      "input_buffer": rng.choice(("ni", "nihao", "shi")),
+                      "candidates": cands, "first_candidate": cands[0],
+                      "key_action": rng.choice(("space", "1", "2", "Page_Down", "Page_Up")),
+                      "has_menu": rng.random() < 0.8}
+            else:
+                ev = {"event_type": "text_committed", "timestamp": ts,
+                      "committed_text": rng.choice("你好世界"),
+                      "source_input_buffer": "ni", "source_first_candidate": "你",
+                      "selected_candidate_rank": rng.randrange(-1, 6)}
+            line = json.dumps(ev, ensure_ascii=False)
+            f.write((line[: len(line) // 2] if i % 97 == 96 else line) + "\n")
+
+
+def test_recurring_report_chain_compiles_each_class_once(spark, tmp_path):
+    """get_spark sizes Spark's JVM-wide generated-class cache above the
+    engine's working set: a second run of the JSONL report chain reuses
+    every class the first run compiled. With Spark's 100 entries the
+    chain's ~100 classes evict each other and the second run recompiles
+    about half of them."""
+    from rime_wanxiang_logger_spark.operators import rime
+    from rime_wanxiang_logger_spark.sources.readers import (
+        ingest_rime_jsonl,
+        rime_events_clean,
+    )
+
+    log = tmp_path / "rime.jsonl"
+    _write_rime_log(log, 300)
+    compiled = (spark.sparkContext._jvm.org.apache.spark.metrics.source
+                .CodegenMetrics.METRIC_COMPILATION_TIME())
+
+    def compilations_of_one_run() -> int:
+        before = compiled.getCount()
+        clean = rime_events_clean(
+            ingest_rime_jsonl(spark, str(log), str(tmp_path / "bronze")))
+        for df in (rime.accuracy_summary(clean), rime.misses_report(clean),
+                   rime.asof_replay(clean, "ts"),
+                   rime.page_rank_replay(rime.session_ids(clean, "ts"), "ts")):
+            df.write.format("noop").mode("overwrite").save()
+        return compiled.getCount() - before
+
+    compilations_of_one_run()
+    assert compiled.getCount() > 0  # the metric is live in this JVM
+    assert compilations_of_one_run() == 0
+
+
 def test_q49_salted_join_not_broadcast(spark, sf_dir):
     """The skew-salt demo must actually exercise a shuffled join on the
     salted key — a broadcast would silently hide the pattern."""
