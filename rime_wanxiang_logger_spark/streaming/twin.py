@@ -758,9 +758,9 @@ _CHANGELOG_CONF = (
 #: remaining drain fixed cost). An availableNow drain of a WATERMARKED
 #: query runs one extra no-data micro-batch after the last data batch
 #: purely to advance the watermark and evict state that is about to die
-#: with the query anyway: batch-count decomposition
-#: (scripts/profile_drains_r15.py, StreamingQueryListener) showed
-#: q92/q106/q121 each paying a 0.5–0.9 s batch 1 with numInputRows=0.
+#: with the query anyway: per-batch progress from a
+#: StreamingQueryListener showed q92/q106/q121 each paying a 0.5–0.9 s
+#: batch 1 with numInputRows=0.
 #: Every drained RESULT is identical by construction: the update-mode
 #: aggregates (q92/q121) emit each verdict in the batch that delivered
 #: the doc, the inner stream-stream join (q106) emits on match, and the

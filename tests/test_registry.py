@@ -28,19 +28,31 @@ def test_every_query_has_an_owner_module():
     assert list(ops.all_queries()) == names
 
 
-def test_bench_trace_verdict():
-    """bench.py's mechanical contamination stamp (judge r13 #7): the
-    max/min trace ratio and the PROBE_DISAGREE boolean derived from
-    it. Short/flat traces are clean; any pair > 1.5x apart flags."""
-    from bench import PROBE_DISAGREE, _trace_verdict
+def test_bench_records_every_layer(spark, sf_dir):
+    """bench.py's per-query record comes from perfbench's tracer: a
+    rename there fails here, not in a full bench run."""
+    import bench
 
-    assert PROBE_DISAGREE == 1.5
-    assert _trace_verdict([]) == (1.0, False)
-    assert _trace_verdict([0.4]) == (1.0, False)
-    ratio, flag = _trace_verdict([0.4, 0.41, 0.39])
-    assert not flag and ratio < 1.1
-    ratio, flag = _trace_verdict([0.4, 0.41, 0.62])
-    assert flag and ratio > 1.5
+    registry = ops.all_queries()
+    tracer = bench.perfbench.Tracer(spark, bench.drains(registry))
+    try:
+        recs = {
+            n: bench.record(tracer, "test", n, registry[n], sf_dir)
+            for n in ("q01_scan_count", "q22_minhash_lsh", "q100_stream_sessions")
+        }
+    finally:
+        spark.streams.removeListener(tracer.listener)
+    layers = {"build_s", "plan_s", "exec_s", "build_jobs", "exec_jobs",
+              "exchanges", "python_nodes"}
+    for rec in recs.values():
+        assert layers <= rec.keys()
+        assert rec["s"] == round(rec["build_s"] + rec["exec_s"], 4)
+        assert rec["exec_jobs"] >= 1
+    assert recs["q22_minhash_lsh"]["build_jobs"] >= 1
+    assert recs["q100_stream_sessions"]["streaming.batches"] >= 1
+    assert "streaming.batches" not in recs["q01_scan_count"]
+    assert bench.scale("/data/sf0.01") == 0.01
+    assert bench.scale("/data/sf0.1-copy/") is None
 
 
 def test_streams_start_only_in_twin_drain_paths():
