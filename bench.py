@@ -11,7 +11,7 @@ sf_dir)``), plan (``tracing.plan_stats``), then a noop write (full
 compute of every output column, no driver collect). Its time is
 ``build_s + exec_s``, so the planning call made for the record stays
 outside it; ``bench_full.json`` keeps every layer, and the drains' stream
-totals from ``tracing.DrainListener``.
+totals from ``tracing.DrainListener`` and their micro-batch job counts.
 """
 
 from __future__ import annotations
@@ -56,8 +56,9 @@ def record(tracer, label: str, name: str, fn, sf_dir: str) -> dict:
     """One timed run of query ``name`` through ``tracer.run_step``: its
     time ``s`` (build + exec), layers, and the Spark jobs launched under
     the step's build and exec job groups. A drain also carries the
-    ``streaming.*`` totals of its micro-batches; stream jobs run under
-    their own group, so its build_jobs leave them out."""
+    ``streaming.*`` totals of its micro-batches, and ``stream_jobs``:
+    micro-batch jobs run under the stream's ``runId`` job group, not the
+    step's, so its build_jobs leave them out."""
     drain = name in tracer.drains
     if drain:
         tracer.listener.progress.clear()
@@ -75,6 +76,8 @@ def record(tracer, label: str, name: str, fn, sf_dir: str) -> dict:
     out["s"] = round(out["build_s"] + out["exec_s"], 4)
     if drain:
         tracer.listener.settle()
+        runs = {p["runId"] for p in tracer.listener.progress}
+        out["stream_jobs"] = sum(len(jobs(run)) for run in runs)
         out.update({k: round(v, 4) for k, v in tracer.listener.totals().items()})
     return out
 

@@ -110,12 +110,12 @@ def q79_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     ranks = deg.select(
         "node", F.lit(PR_SCALE).cast("bigint").alias("r")
     )
-    # Each round pins its frontier via pin_frontier (judge r7 #7): the
-    # bare per-round localCheckpoint this loop used carries the
-    # iterated-join sizeInBytes estimate forward, the same squaring
-    # failure mode the CC loop hit at sf5 — latent here only because
-    # PR_ITERS is a fixed 5. The count() is the caller-contract
-    # materializing action (reads the just-checkpointed blocks).
+    # Each round pins its frontier via pin_frontier: a bare per-round
+    # localCheckpoint carries the iterated-join sizeInBytes estimate
+    # forward, the same squaring failure mode the CC loop hit at sf5 —
+    # latent here only because PR_ITERS is a fixed 5. The count() is
+    # the caller-contract action: it computes the frontier once and
+    # stores its checkpoint blocks and cache.
     prev = None
     for _ in range(PR_ITERS):
         contrib = ranks.join(deg, "node").select(
@@ -139,8 +139,8 @@ def q79_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
         if prev is not None:
             prev.unpersist(False)
         prev = ranks
-    # Final-frontier cache drop (ADVICE r8, pin_frontier caller
-    # contract): the count() above materialized it, and the returned
+    # Final-frontier cache drop (pin_frontier caller contract): the
+    # count() above materialized it, and the returned
     # join re-reads the localCheckpoint blocks — unpersisting changes
     # no values, it stops leaking one cached O(V) ranks table per call.
     ranks.unpersist(False)

@@ -15,17 +15,18 @@ q56_hash_split       deterministic content-hash train/val/test split —
                      is a pure function of doc_id)
 
 Design for 100 TB:
-- q53 is iterative min-label propagation with ONE pointer-jumping
-  step per round (label := label-of-label), giving offset doubling
-  along id-chains: ~log2(component size) total rounds (measured: 16
-  for sf5's 57.7k-node giant component) vs O(diameter) for plain
-  propagation. The jump join touches only the O(V) label table, so
-  iterating it to a per-round fixpoint would add O(V) join rounds
-  without reducing the O(E) round count below log2 — not worth it. Lineage is truncated per step with
-  localCheckpoint so the plan stays O(1) deep (at cluster scale, swap
-  localCheckpoint for checkpoint() on HDFS/S3 — same semantics,
-  fault-tolerant). Duplicate clusters are near-cliques, so real
-  convergence is 2-3 rounds.
+- q53 seeds its labels with one vectorized union-find per partition of
+  the pair graph, then checks them in one action. Up to sf1 the
+  candidate pairs arrive in one partition, so the seed is final and no
+  round runs (sf1, 31k pairs: 3 jobs and 0.5-0.65 s warm; from
+  singleton labels, 8 rounds took 84 jobs and 3.6-4.6 s). When a
+  component spans partitions, min-label propagation with one pointer
+  jump per round finishes from the seed, over each partition's
+  components as stars (O(V) edges, not O(E)): ~log2(component size)
+  rounds (sf5, 741k pairs in 4 partitions: 14 rounds, 16 from
+  singleton labels). Each frontier is a lazy localCheckpoint, so the
+  plan stays O(1) deep (on a cluster, checkpoint() on HDFS/S3: same
+  semantics, fault-tolerant).
 - q54/q55 rely on Catalyst rewriting the correlated subquery / IN
   predicate into aggregate + join: `.explain` shows a plain
   hash-aggregate feeding a join, no per-row subquery execution.
@@ -41,19 +42,18 @@ oracle-paired.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from ..functions.stable import dsum, dsum_expr
 from ..sources.readers import load_table
 from ._stage_cache import consume, provide
 from .dedup import _CAND_CTE, cand_pairs
 
-# Propagation + one pointer jump per round reaches the component min
-# in ~log2(component size) rounds (measured: a 57.7k-node giant
-# component converged in exactly 16 = ceil(log2(57717)) rounds), so
-# 50 rounds covers components of 2^50 nodes — any conceivable scale.
-# Rounds are cheap (one O(E) + one O(V) shuffle); the pre-r7 cap of
-# 15 was calibrated on sf0.1-sf1 graphs and burst at sf5.
+# A round of min-label propagation plus one pointer jump reaches the
+# component min in ~log2(component size) rounds (measured: a 57.7k-node
+# giant component converged in exactly 16 = ceil(log2(57717)) rounds),
+# so 50 rounds covers components of 2^50 nodes. A cap of 15, sized on
+# sf0.1-sf1 graphs, burst at sf5.
 MAX_CC_ROUNDS = 50
 
 Q17_BRAND = "Brand#4"
@@ -61,145 +61,145 @@ Q18_MIN_QTY = 250.0
 
 
 def pin_frontier(df: DataFrame) -> DataFrame:
-    """Pin one frontier of an iterated checkpoint+join loop (judge r7
-    #7 — the reusable form of the CC blowup fix, shared with q79's
-    power iteration).
+    """Pin one frontier of an iterated join loop (CC rounds, q79's
+    power iteration): a lazy ``localCheckpoint`` plus ``persist``.
 
-    ``localCheckpoint`` cuts the logical lineage so the plan stays
-    O(1) deep; ``persist`` is LOAD-BEARING on top of it: Spark's
-    checkpoint (local AND reliable) carries the pre-checkpoint plan's
-    sizeInBytes estimate into the new LogicalRDD leaf via originStats,
-    and a join's estimate is the PRODUCT of its children's, so any
-    iterated self-join SQUARES the carried estimate per round —
-    multi-million-digit BigIntegers whose planning-time arithmetic
-    grows geometrically (measured 0.5→70 s/step by step 24). A
-    MATERIALIZED InMemoryRelation reports its actual cached size,
-    resetting the leaf to an honest constant each round.
+    The checkpoint cuts the lineage so the plan stays O(1) deep. The
+    persist keeps planning time flat: a checkpoint's leaf carries the
+    pre-checkpoint plan's sizeInBytes estimate (originStats), and a
+    join's estimate is the product of its children's, so an iterated
+    self-join squares the carried estimate every round (measured
+    0.5 -> 70 s/step of planning by step 24). A materialized
+    InMemoryRelation reports its actual cached size instead.
 
-    Caller contract: run an action against the returned frame before
-    building the next round's plan on it (materializes the cache —
-    cheap, it re-reads the checkpointed blocks), unpersist the
-    superseded frontier, and unpersist the FINAL frontier too before
-    returning from the loop (ADVICE r8 — the cache served its
-    stats-resetting purpose once the iteration is over; the
-    localCheckpoint blocks keep backing any lazy result built on it,
-    so dropping the cache changes no values, it just stops leaking one
-    O(V) InMemoryRelation per call into the session). At cluster scale
-    swap localCheckpoint for reliable checkpoint() — same stats
-    remedy, fault-tolerant."""
-    out = df.localCheckpoint()
+    Caller contract: run one action against the returned frame before
+    building the next round on it. That action computes the frontier
+    once and stores both the checkpoint blocks and the cache. Unpersist
+    each frontier once it is superseded, and the last one before
+    returning: its checkpoint blocks keep backing any plan built on it,
+    so dropping the cache changes no values and leaks no O(V) table
+    into the session. On a cluster, swap localCheckpoint for a reliable
+    checkpoint() (same stats remedy, fault-tolerant)."""
+    out = df.localCheckpoint(eager=False)
     out.persist()
     return out
 
 
+def _observed(df: DataFrame, metric) -> int:
+    """Run one noop-write action over ``df``; ``metric`` aggregated over
+    its rows (0 when there are none)."""
+    obs = Observation()
+    df.observe(obs, metric.alias("m")).write.format("noop").mode("overwrite").save()
+    return obs.get["m"] or 0
+
+
+def _seed_labels(pairs: DataFrame) -> DataFrame:
+    """(node, label, roots): ``roots`` are the node's components in the
+    subgraph of each partition of ``pairs``, each named by its min node;
+    ``label`` is the least of them. So every label is a node of the
+    node's component and <= the node."""
+    a, b = pairs.columns
+    dt = pairs.schema[a].dataType.simpleString()
+
+    def local_roots(frames):
+        # Vectorized union-find: hook each edge's larger root under its
+        # smaller one, then jump pointers to the roots, until no edge
+        # joins two roots. np.unique sorts, so a root is its min node.
+        import numpy as np
+        import pandas as pd
+
+        frames = list(frames)
+        if not frames:
+            return
+        ends = pd.concat(frames)
+        n = len(ends)
+        nodes, ix = np.unique(
+            np.concatenate([ends[a].to_numpy(), ends[b].to_numpy()]),
+            return_inverse=True,
+        )
+        root = np.arange(len(nodes))
+        while True:
+            while (root[root] != root).any():
+                root = root[root]
+            ra, rb = root[ix[:n]], root[ix[n:]]
+            if (ra == rb).all():
+                break
+            np.minimum.at(root, np.maximum(ra, rb), np.minimum(ra, rb))
+        yield pd.DataFrame({"node": nodes, "root": nodes[root]})
+
+    return pairs.mapInPandas(local_roots, f"node {dt}, root {dt}").groupBy(
+        "node"
+    ).agg(F.min("root").alias("label"), F.collect_set("root").alias("roots"))
+
+
 def connected_components(pairs: DataFrame) -> DataFrame:
     """Connected components of an undirected graph given as a
-    (doc_a, doc_b) pair DataFrame. Returns (node, label) with
-    label = min node id in the component.
+    two-column pair DataFrame. Returns (node, label) with label = min
+    node id in the component.
 
-    Iterative min-label propagation with a pointer-jumping step per
-    round (label := label-of-label). The jump gives offset doubling
-    along id-chains, so convergence is ~log2(component size) rounds
-    (measured: a 57.7k-node giant component converges in exactly 16
-    rounds). Convergence test: labels only ever decrease, so the
-    label sum is strictly decreasing until fixpoint — one cheap
-    aggregate per round instead of a join + inequality count.
-
-    r14 round shape (guide §2.4 — same fixpoint, two fewer exchanges
-    per round, measured 5.8 → 3.9 s on the q72 graph with identical
-    labels):
-
-    - min-propagation is ONE edge join + a union with the node's own
-      label + ONE min aggregate (the former shape ran join → agg →
-      left-join, re-shuffling the O(V) label table a second time just
-      to re-attach own labels the union now carries for free);
-    - the pinned edge set is hash-partitioned by ``src`` ONCE
-      (``repartition`` before the pin; Dataset.checkpoint carries the
-      partitioning into the LogicalRDD), so every round's edge join
-      exchanges only the label side — the O(E) side never re-shuffles.
-
-    Every per-round pin goes through :func:`pin_frontier`
-    (localCheckpoint + persist — see its docstring for why the persist
-    is load-bearing: the iterated-checkpoint sizeInBytes-squaring
-    blowup, measured on a static 142k-row table at 0.5 s/step flat for
-    30 steps with persist vs 0.5→70 s/step by step 24 without). The
-    round's convergence aggregate doubles as the cache-materializing
-    action. Same remedy GraphX-style iterative algorithms use: cache
-    every frontier.
+    Seed: one union-find per partition of ``pairs`` (``_seed_labels``),
+    pinned lazily. Verify: one action counts the partition-local
+    components whose members got more than one seed label, and
+    materializes the pin. Local components cover every edge, so when
+    none is split the labels are constant on each component; constant
+    labels that are in-component nodes <= their node are the component
+    min (the min keeps its own id), so the seed is the answer.
+    Iterate otherwise, from the seed, over the local components as
+    stars on their roots (same components, O(V) edges). A round jumps
+    one pointer over the pinned frontier (label := label of label),
+    then propagates the min over the star edges once; a self-loop per
+    node carries its own label into that min. The jump gives offset
+    doubling along id-chains, so rounds are ~log2(component size).
+    Labels only decrease, so an unchanged label sum is the fixpoint; it
+    comes from an Observation on the action that materializes the
+    frontier.
     """
-    # Symmetrize once, partition by the join key, and pin it: every
-    # round re-reads the edge set through the same partitioning.
-    edges = pin_frontier(
-        pairs.union(
-            pairs.select(F.col(pairs.columns[1]), F.col(pairs.columns[0]))
-        )
-        .toDF("src", "dst")
-        .repartition("src")
+    seed = _seed_labels(pairs).localCheckpoint(eager=False)
+    links = seed.select("node", "label", F.explode("roots").alias("root"))
+    split = _observed(
+        links.groupBy("root").agg((F.min("label") < F.max("label")).alias("split")),
+        F.sum(F.col("split").cast("long")),
     )
-    labels = pin_frontier(
-        edges.select(F.col("src").alias("node"))
-        .distinct()
-        .withColumn("label", F.col("node"))
-    )
-    prev_total = labels.agg(F.sum("label")).collect()[0][0]
-    converged = False
-    for _ in range(MAX_CC_ROUNDS):
-        contrib = edges.join(labels, edges.src == labels.node).select(
-            F.col("dst").alias("node"), "label"
-        )
-        prop = (
-            contrib.union(labels)
-            .groupBy("node")
-            .agg(F.min("label").alias("label"))
-        )
-        # Pointer jumping: follow one indirection (label := its label's
-        # label). Labels are always node ids, so the self-join resolves.
-        hop = prop.select(
-            F.col("node").alias("pnode"), F.col("label").alias("plabel")
-        )
-        new_labels = pin_frontier(
-            prop.join(hop, prop.label == hop.pnode, "left").select(
-                "node",
-                F.coalesce("plabel", "label").alias("label"),
+    labels = seed.select("node", "label")
+    if not split:
+        return labels
+    stars = links.select("node", "root")
+    edges = stars.union(stars.select("root", "node")).union(
+        labels.select("node", "node")
+    ).toDF("src", "dst")
+    prev = None
+    try:
+        for _ in range(MAX_CC_ROUNDS):
+            hop = labels.toDF("pnode", "plabel")
+            jumped = labels.join(hop, labels.label == hop.pnode, "left").select(
+                "node", F.coalesce("plabel", "label").alias("label")
             )
-        )
-        total = new_labels.agg(F.sum("label")).collect()[0][0]
-        # The superseded frontier's cached copy is dead weight now —
-        # new_labels was already materialized from it.
+            new_labels = pin_frontier(
+                edges.join(jumped, edges.src == jumped.node)
+                .groupBy(F.col("dst").alias("node"))
+                .agg(F.min("label").alias("label"))
+            )
+            total = _observed(new_labels, F.sum("label"))
+            labels.unpersist(False)
+            labels = new_labels
+            if total == prev:
+                return labels
+            prev = total
+    finally:
         labels.unpersist(False)
-        labels = new_labels
-        if total == prev_total:
-            converged = True
-            break
-        prev_total = total
-    edges.unpersist(False)
-    # Drop the final frontier's cache too (ADVICE r8): the convergence
-    # aggregate already materialized it, and its localCheckpoint blocks
-    # still back the returned plan — without this every CC call leaked
-    # one cached O(V) labels table into the session for the bench/sweep
-    # lifetime. Downstream consumers re-read checkpoint blocks, not the
-    # iterated lineage, so values are unchanged.
-    labels.unpersist(False)
-    if not converged:
-        # Unconverged labels are silently-wrong clusters; fail loudly.
-        # With a pointer jump per round the round count is
-        # ~log2(component), so hitting the cap means pathological input (or a
-        # far bigger graph than the cap was sized for — raise
-        # MAX_CC_ROUNDS deliberately).
-        raise RuntimeError(
-            f"connected_components: no fixpoint after {MAX_CC_ROUNDS} "
-            "rounds; labels may be unconverged"
-        )
-    return labels
+    # Unconverged labels are silently wrong clusters: fail loudly.
+    raise RuntimeError(
+        f"connected_components: no fixpoint after {MAX_CC_ROUNDS} "
+        "rounds; labels may be unconverged"
+    )
 
 
 def _cc_labels_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The shared detect→cluster stage: CC labels (node, label) over
-    the MinHash band-collision candidate graph. r14: the pairs come
-    from the shared ``q22_pairs`` stage (dedup.cand_pairs — itself
-    checkpointed, so the CC union's two branches read one materialized
-    edge set either way; inside sharing() the detect stage is computed
-    once per session instead of once per cc_labels rebuild)."""
+    the MinHash band-collision candidate graph. The pairs come from the
+    shared ``q22_pairs`` stage (dedup.cand_pairs, itself checkpointed),
+    so inside sharing() the detect stage runs once per session, not
+    once per cc_labels rebuild."""
     pairs = cand_pairs(spark, sf_dir)
     return connected_components(pairs)
 
@@ -255,7 +255,7 @@ def q54_tpch_q17(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # DataFrame parameter binding (``spark.sql(..., name=df)``) instead of
     # createOrReplaceTempView: no session temp-view namespace pollution,
-    # no clobbering a user's same-named views (judge r1 advice).
+    # no clobbering a user's same-named views.
     return spark.sql(
         f"""
         SELECT
@@ -359,10 +359,10 @@ def q85_leakfree_split(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("node").alias("doc_id"), F.col("label").alias("rep_id")
     )
     # Join strategy pinned (STATS HAZARD): the cc_labels pin scan
-    # reaches this join with no intervening shuffle and its
-    # originStats lie (r14: the new CC round shape carries a SMALL
-    # estimate, which flipped the static plan to broadcasting the pin
-    # — the audit caught it). Shuffle-hash, labels side as build.
+    # reaches this join with no intervening shuffle and its originStats
+    # can be far too SMALL (a CC round shape once flipped the static
+    # plan to broadcasting the corpus-sized pin; cc_audit caught it).
+    # Shuffle-hash, labels side as build.
     rep = docs.select("doc_id", "lang", "n_chars").join(
         labels.hint("shuffle_hash"), "doc_id", "left"
     ).select(
@@ -422,7 +422,7 @@ def q65_tpch_q21(spark: SparkSession, sf_dir: str) -> DataFrame:
     the remaining classic decorrelation pattern (Q17 covers scalar
     subqueries, Q18 covers IN/HAVING). Tables arrive via DataFrame
     parameter binding — no temp-view side effects in the shared
-    session (judge r1 advice)."""
+    session."""
     return spark.sql(
         _Q21_SQL,
         supplier=load_table(spark, sf_dir, "supplier"),

@@ -107,6 +107,88 @@ def test_cc_stats_estimate_stays_bounded(spark):
     assert len(size) < 40, f"cost-model estimate compounding: {size[:80]}..."
 
 
+def _labels(df) -> dict[int, int]:
+    return {r["node"]: r["label"] for r in df.collect()}
+
+
+def _clusters_and_path() -> list[tuple[int, int]]:
+    # ten 5-cliques on ids 100.. and a 30-node path on ids 0..29
+    cliques = [
+        (100 + 10 * c + i, 100 + 10 * c + j)
+        for c in range(10)
+        for i in range(5)
+        for j in range(i + 1, 5)
+    ]
+    return cliques + [(i, i + 1) for i in range(29)]
+
+
+def test_cc_iterates_when_components_span_partitions(spark, monkeypatch):
+    """Round-robin the pairs over 4 partitions: every component has
+    edges in several partitions, so the per-partition seed is split and
+    the propagate + jump loop must finish the job."""
+    from rime_wanxiang_logger_spark.operators import pipeline
+
+    rounds = []
+    pin = pipeline.pin_frontier
+    monkeypatch.setattr(
+        pipeline, "pin_frontier", lambda df: rounds.append(1) or pin(df)
+    )
+    edges = _clusters_and_path()
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long").repartition(4)
+    assert _labels(pipeline.connected_components(pairs)) == _union_find(edges)
+    assert rounds, "the seed cannot be final when components span partitions"
+
+
+def test_cc_final_seed_runs_no_round(spark, monkeypatch):
+    """All pairs in one partition: the seed is exact, so the call is the
+    seed plus one verifying action, and no round runs."""
+    from rime_wanxiang_logger_spark.operators import pipeline
+
+    monkeypatch.setattr(pipeline, "pin_frontier", None)  # a round would fail
+    edges = _clusters_and_path()
+    pairs = spark.createDataFrame(edges, "doc_a long, doc_b long").coalesce(1)
+    pairs = pairs.localCheckpoint()
+    sc = spark.sparkContext
+    group = "test_cc_final_seed_runs_no_round"
+    sc.setJobGroup(group, group)
+    try:
+        labels = pipeline.connected_components(pairs)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the seed's shuffle, then the verify's shuffle and result
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 3
+    assert _labels(labels) == _union_find(edges)
+
+
+def test_cc_empty_pairs(spark):
+    from rime_wanxiang_logger_spark.operators.pipeline import (
+        connected_components,
+    )
+
+    pairs = spark.createDataFrame([], "doc_a long, doc_b long").repartition(4)
+    labels = connected_components(pairs)
+    assert labels.columns == ["node", "label"]
+    assert labels.count() == 0
+
+
+def test_cc_calls_leak_no_listener(spark):
+    """Each call reads its verdicts through Observations; repeated calls
+    must leave the session's query-execution listeners as they were."""
+    from rime_wanxiang_logger_spark.operators.pipeline import (
+        connected_components,
+    )
+
+    pairs = spark.createDataFrame(
+        _clusters_and_path(), "doc_a long, doc_b long"
+    ).repartition(2)
+    manager = spark._jsparkSession.listenerManager()
+    connected_components(pairs)
+    before = len(manager.listListeners())
+    for _ in range(10):
+        connected_components(pairs)
+    assert len(manager.listListeners()) == before
+
+
 def test_pagerank_stats_estimate_stays_bounded(spark, sf_dir):
     """The same iterated-checkpoint blowup regression, pinned on the
     OTHER iterated loop (judge r7 #7): q79's power iteration now pins
@@ -123,3 +205,22 @@ def test_pagerank_stats_estimate_stays_bounded(spark, sf_dir):
         out._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
     )
     assert len(size) < 40, f"cost-model estimate compounding: {size[:80]}..."
+
+
+def test_q53_warm_call_compiles_no_class(spark, sf_dir):
+    """A second q53 call (detect pairs, seed, verify, cluster sizes)
+    reuses every generated class the first call compiled: its plans are
+    the same from call to call, so none is recompiled."""
+    from rime_wanxiang_logger_spark.operators.pipeline import q53_dedup_clusters
+
+    compiled = (spark.sparkContext._jvm.org.apache.spark.metrics.source
+                .CodegenMetrics.METRIC_COMPILATION_TIME())
+
+    def compilations_of_one_call() -> int:
+        before = compiled.getCount()
+        q53_dedup_clusters(spark, sf_dir).write.format("noop").mode(
+            "overwrite").save()
+        return compiled.getCount() - before
+
+    assert compilations_of_one_call() > 0 or compiled.getCount() > 0
+    assert compilations_of_one_call() == 0

@@ -50,6 +50,7 @@ def test_bench_records_every_layer(spark, sf_dir):
         assert rec["exec_jobs"] >= 1
     assert recs["q22_minhash_lsh"]["build_jobs"] >= 1
     assert recs["q100_stream_sessions"]["streaming.batches"] >= 1
+    assert recs["q100_stream_sessions"]["stream_jobs"] >= 1
     assert "streaming.batches" not in recs["q01_scan_count"]
     assert bench.scale("/data/sf0.01") == 0.01
     assert bench.scale("/data/sf0.1-copy/") is None
