@@ -64,6 +64,14 @@ materialized size (the r9 audit confirmed q24/q80/q103's post-shuffle
 sides are safely adaptive), so "AQE decides" remains the right
 default there.
 
+AUXILIARY MEMOS: the same scope also gates memos of eager work that is
+not a registered stage (see :data:`AUX_CLEARERS`): similarity's banding
+model, and rime's T1 session bracketing, which runs once per cleaned-log
+frame object so the report chain's ``asof_replay`` and
+``page_rank_replay`` share one pass. A memo hit is recorded as
+``aux:<name>`` through :func:`record_aux`, and :func:`clear` drops the
+memos with the pins.
+
 IMMUTABILITY ASSUMPTION: pins are keyed by (applicationId, stage,
 sf_dir) and NOT by a data fingerprint — the files under ``sf_dir`` are
 assumed immutable for the lifetime of the session (true for the
@@ -299,10 +307,14 @@ def _pin(
 _CKPT_DIR_SET: tuple[str, str] | None = None
 
 
-#: Auxiliary session caches that must honor :func:`clear`'s contract
-#: (r14: similarity's banding-model memo — scalar model parameters
-#: keyed (applicationId, sf_dir) exactly like pins). Each entry is a
-#: callable taking the same optional sf_dir filter as clear().
+#: Auxiliary session caches that must honor :func:`clear`'s contract.
+#: Each entry is a callable taking the same optional sf_dir filter as
+#: clear(). Registered today:
+#: - ``similarity._MODEL_MEMO``: the banding model's scalar parameters,
+#:   keyed (applicationId, sf_dir) exactly like pins;
+#: - ``rime._SESSIONS_MEMO``: T1 session bracketings, keyed by the
+#:   input frame object (held weakly) and order column; a frame has no
+#:   sf_dir, so any clear() drops them all.
 AUX_CLEARERS: list[Callable[[str | None], None]] = []
 
 
@@ -337,18 +349,23 @@ def provide(
 ) -> DataFrame:
     """Stage-provider hook: ALWAYS runs ``build()`` (the provider's own
     cost stays honest); when sharing is active the result is pinned
-    LAZILY (judge r8 next-round #2) and the pin refreshed, and the
-    pinned copy is returned so the provider's consumer-visible result
-    is the same blocks later compositions read.
+    with ``eager=False`` and the pin refreshed, and the pinned copy is
+    returned so the provider's consumer-visible result is the same
+    blocks later compositions read.
 
-    Lazy (eager=False) because an eager pin runs the provider's whole
-    job as a side effect of plan construction and the provider's own
+    ``eager=False`` because an eager pin runs the provider's final
+    stage as a side effect of plan construction and the provider's own
     action then re-reads the blocks — two passes inside the provider's
-    timed run where one suffices (q26's r8 bench row paid exactly
-    this). With the lazy cut the blocks are written by whichever
-    action touches the pin first: the provider's own collect in the
-    normal bench/driver flow, or the first consumer's when the
-    provider result was used plan-only."""
+    timed run where one suffices (q26's bench row paid exactly this).
+    What ``eager=False`` defers is the pin's FINAL stage only: its
+    blocks are written by whichever action touches the pin first (the
+    provider's own collect in the normal bench/driver flow, or the
+    first consumer's when the provider result was used plan-only).
+    With AQE on, building the pin still runs every shuffle stage
+    upstream of it (``toRdd`` materializes the query stages): a
+    ``range → groupBy → join`` pin launches 2 jobs at the call (1 with
+    AQE off), and on a warm sharing pass q98's ``q98_verdicts`` pin
+    call launches 5 jobs, leaving the query's action 1 job."""
     _check_registered(name)
     if _TRACE is not None:
         _TRACE.append(name)
@@ -371,14 +388,15 @@ def consume(
     DataFrame — compositions iterate over these stage outputs
     (connected components, recall joins), so the plan cut is a
     correctness/cost requirement with or without sharing. Outside a
-    sharing scope the checkpoint is LAZY (eager=False), which removes
-    the CHECKPOINT's job launch from plan construction; note the
-    caveat: for stages whose ``build`` is itself eager (the CC-backed
-    ``cc_labels`` / ``q98_verdicts``, whose connected-components
-    iteration drives per-round driver-side collects), constructing a
-    composition's plan still runs those build jobs — the lazy
-    checkpoint only makes plan construction job-free for stages with a
-    lazy build (``q104_bounds``, ``q29_quality``). ADVICE r6.
+    sharing scope the checkpoint is ``eager=False``, which defers only
+    the checkpoint's final stage (its blocks are written by the first
+    action). With AQE on, every shuffle stage upstream of the cut still
+    runs when the checkpoint is built (``provide`` gives the measured
+    counts), so plan construction is job-free only for a lazy ``build``
+    whose plan has no exchange. Stages whose ``build`` is itself eager
+    (the CC-backed ``cc_labels`` / ``q98_verdicts``, whose
+    connected-components pass collects on the driver) run those build
+    jobs at construction too.
 
     The non-sharing path is ALWAYS ``localCheckpoint`` — never the
     durable :data:`CHECKPOINT_DIR_CONF` route (ADVICE r7): a raw call

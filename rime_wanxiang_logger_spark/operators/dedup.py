@@ -172,10 +172,12 @@ def _candidate_pairs(sig: DataFrame) -> DataFrame:
 
 def _cand_pairs_build(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    # lazy (ADVICE r14): an eager checkpoint here launched a Spark job
-    # during RAW plan construction for every q22_pairs consumer; the
-    # signature blocks now materialize with whichever action touches
-    # the pair plan first.
+    # eager=False defers the signature stage itself: its blocks are
+    # written by the first action over the pair plan, not by every raw
+    # q22_pairs consumer's plan construction. With AQE on, the call
+    # still runs the stages upstream of the cut: fanout's round-robin
+    # shuffle, 1 job, when the documents scan has fewer splits than the
+    # shuffle width (the single-row-group test files).
     return _candidate_pairs(_signatures(docs).localCheckpoint(eager=False))
 
 

@@ -7,7 +7,11 @@ accuracy_summary   ``rime-logger analyze``     (cli.py:268-312;
                    Go twin analyzer.go:91-177)
 misses_report      ``rime-logger export-misses`` (cli.py:315-359;
                    Go twin analyzer.go:181-264)
-session_ids        T1 session bracketing from session_start markers
+session_ids        T1 session bracketing from session_start markers;
+                   inside ``_stage_cache.sharing()`` it runs once per
+                   input frame object and order column, so the report
+                   chain's asof_replay and page_rank_replay share one
+                   eager bracketing of the same cleaned log
 asof_replay        W2/T2: reconstruct each commit's pre-commit input
                    state from the input_state_changed stream — the
                    engine-side replay of what the producer does at
@@ -29,6 +33,8 @@ Semantics preserved bit-for-bit from the reference:
 
 from __future__ import annotations
 
+import weakref
+
 from pyspark.sql import (
     Column,
     DataFrame,
@@ -38,6 +44,7 @@ from pyspark.sql import (
 )
 
 from ..sources.readers import load_table
+from ._stage_cache import AUX_CLEARERS, is_sharing, record_aux
 from .windows import global_cumsum
 
 PAGE_SIZE = 6  # input_habit_logger.lua:223
@@ -111,16 +118,56 @@ def misses_report(events: DataFrame) -> DataFrame:
     return report
 
 
+#: Sharing-scope memo of T1 bracketings: input frame -> {order_col:
+#: bracketed frame}. The frame is held weakly, so an entry dies with its
+#: input, and a bracketed frame never references its input (its plan
+#: starts at the global_cumsum pin), so the value cannot keep its key
+#: alive. Keyed by object identity, not plan equality: a re-read of a
+#: rewritten directory is a new frame and brackets again, while the two
+#: session-keyed reports over one cleaned log share one pass.
+_SESSIONS_MEMO: weakref.WeakKeyDictionary[DataFrame, dict[str, DataFrame]] = (
+    weakref.WeakKeyDictionary()
+)
+
+
+def _clear_sessions_memo(sf_dir: str | None) -> None:
+    # A frame carries no sf_dir, so every clear() drops every entry.
+    _SESSIONS_MEMO.clear()
+
+
+AUX_CLEARERS.append(_clear_sessions_memo)
+
+
 def session_ids(events: DataFrame, order_col: str = "ingest_id") -> DataFrame:
     """T1: number sessions by cumulative count of session_start markers
     in ingest order (the reference relies on file order; callers must
     supply a total-order column, e.g. the JSONL source's ingest_id —
     SURVEY §7.3.1).
 
-    Two-phase global prefix sum (windows.global_cumsum): a single-user
-    rime log would tolerate one WindowExec task, but this is the
-    engine's only T1 path for raw logs, so it gets the 100 TB-safe
-    formulation (judge r1 "what's wrong" #3)."""
+    Two-phase global prefix sum (windows.global_cumsum), never a
+    single-task WindowExec: a raw log has no session key yet, so the
+    running count runs over the whole log's total order, and only the
+    two-phase form keeps that order-wide sum parallel at any log size.
+    Building the result is eager: with AQE on, at most 5 Spark jobs
+    (the global_cumsum docstring lists them).
+
+    Inside ``_stage_cache.sharing()`` the bracketing is memoized per
+    input frame object and ``order_col`` (see ``_SESSIONS_MEMO``): a
+    second call on the same frame launches no Spark job and returns the
+    same pinned frame, recorded as ``aux:rime_sessions``. A raw call
+    outside a scope always brackets afresh."""
+    if not is_sharing():
+        return _session_ids(events, order_col)
+    by_order = _SESSIONS_MEMO.setdefault(events, {})
+    got = by_order.get(order_col)
+    if got is None:
+        by_order[order_col] = got = _session_ids(events, order_col)
+    else:
+        record_aux("aux:rime_sessions")
+    return got
+
+
+def _session_ids(events: DataFrame, order_col: str) -> DataFrame:
     return global_cumsum(
         events,
         [order_col],
@@ -175,8 +222,11 @@ def page_rank_replay(
     IME processes in practice, and the sequential oracle in
     tests/test_rime_parity.py pins this contract).
 
-    Cost: three session-keyed exchanges (session → session×segment →
-    session). Each is fact-scale parallel; none is global.
+    Cost: one exchange, ``hashpartitioning(session_col)``, with AQE on
+    and off. The ``(session_col, _seg)`` windows are clustered by the
+    session key already, so they add sorts, not shuffles (3 ``Sort``,
+    6 ``Window`` in the executed plan; pinned in tests/test_plans.py).
+    The exchange is fact-scale parallel; nothing is global.
     """
     is_key = F.col("event_type") == "input_state_changed"
     is_commit = F.col("event_type") == "text_committed"

@@ -124,8 +124,8 @@ def global_cumsum(
 
     - The ordering must be total (include a unique tiebreaker like
       ``event_id``) for deterministic output.
-    - The per-partition pass is PINNED (lazy ``localCheckpoint``) before
-      anything reads it. This is mandatory for correctness, not an
+    - The per-partition pass is PINNED (``localCheckpoint(eager=False)``)
+      before anything reads it. This is mandatory for correctness, not an
       optimization: ``spark_partition_id()`` is nondeterministic, so
       exchange reuse never fires, and every reader of an unpinned pass
       would run its own ``repartitionByRange`` with its own sampled
@@ -136,15 +136,21 @@ def global_cumsum(
       collected to the driver over the pin; the exclusive prefix sums
       are added by a projection (``element_at`` into a literal array),
       so the plan has no join and no broadcast.
-    - Building the plan executes the pass: the totals ``collect()``
-      runs the range-boundary sampling job, the range shuffle, the pin
-      and the totals aggregate. With AQE on that is 5 Spark jobs per
-      call (3 before the collect replaced the offset join, which ran
-      only the sampling and the range shuffle); with AQE off, 2 (was 1).
-      Explain-only callers therefore materialize the pin too. The pin
-      is a fact-scale materialization (MEMORY_AND_DISK), so rank an
-      aggregated or filtered input (q10: ≤ #distinct ranks rows; q04:
-      the miss subset), never the raw fact table.
+    - Building the plan executes the pass, at most 5 Spark jobs per
+      call with AQE on and 2 with AQE off (pinned by
+      ``test_global_row_number_construction_jobs``). ``eager=False``
+      defers only the pin's final stage, whose blocks are written by
+      the first action over the pin. With AQE on, the pin call itself
+      still runs every stage upstream of it (``toRdd`` materializes
+      the query stages): the range-boundary sampling job, the range
+      shuffle and the ``_pid`` window's shuffle, 3 jobs. The totals
+      ``collect()`` then writes the pin's blocks and aggregates them,
+      2 more. With AQE off the pin call runs only the sampling job
+      and the collect runs the rest as one job. Explain-only callers
+      therefore materialize the pin too. The pin is a fact-scale
+      materialization (MEMORY_AND_DISK), so rank an aggregated or
+      filtered input (q10: ≤ #distinct ranks rows; q04: the miss
+      subset), never the raw fact table.
     """
     spark = df.sparkSession
     npart = int(

@@ -246,8 +246,11 @@ def test_recurring_report_chain_compiles_each_class_once(spark, tmp_path):
     engine's working set: a second run of the JSONL report chain reuses
     every class the first run compiled. With Spark's 100 entries the
     chain's ~100 classes evict each other and the second run recompiles
-    about half of them."""
-    from rime_wanxiang_logger_spark.operators import rime
+    about half of them. Run raw and inside sharing(), where the chain
+    brackets sessions once per cleaned log, as the benchmark runs it."""
+    import contextlib
+
+    from rime_wanxiang_logger_spark.operators import _stage_cache, rime
     from rime_wanxiang_logger_spark.sources.readers import (
         ingest_rime_jsonl,
         rime_events_clean,
@@ -258,19 +261,55 @@ def test_recurring_report_chain_compiles_each_class_once(spark, tmp_path):
     compiled = (spark.sparkContext._jvm.org.apache.spark.metrics.source
                 .CodegenMetrics.METRIC_COMPILATION_TIME())
 
-    def compilations_of_one_run() -> int:
+    def compilations_of_one_run(scope) -> int:
         before = compiled.getCount()
-        clean = rime_events_clean(
-            ingest_rime_jsonl(spark, str(log), str(tmp_path / "bronze")))
-        for df in (rime.accuracy_summary(clean), rime.misses_report(clean),
-                   rime.asof_replay(clean, "ts"),
-                   rime.page_rank_replay(rime.session_ids(clean, "ts"), "ts")):
-            df.write.format("noop").mode("overwrite").save()
+        with scope():
+            clean = rime_events_clean(
+                ingest_rime_jsonl(spark, str(log), str(tmp_path / "bronze")))
+            for df in (rime.accuracy_summary(clean), rime.misses_report(clean),
+                       rime.asof_replay(clean, "ts"),
+                       rime.page_rank_replay(rime.session_ids(clean, "ts"), "ts")):
+                df.write.format("noop").mode("overwrite").save()
         return compiled.getCount() - before
 
-    compilations_of_one_run()
-    assert compiled.getCount() > 0  # the metric is live in this JVM
-    assert compilations_of_one_run() == 0
+    _stage_cache.clear()
+    try:
+        for scope in (contextlib.nullcontext, _stage_cache.sharing):
+            compilations_of_one_run(scope)
+            assert compiled.getCount() > 0  # the metric is live in this JVM
+            assert compilations_of_one_run(scope) == 0, scope.__name__
+    finally:
+        _stage_cache.clear()
+
+
+@pytest.mark.parametrize("aqe", ["true", "false"])
+def test_page_rank_replay_one_exchange_above_t1_pin(spark, tmp_path, aqe):
+    """page_rank_replay over the T1 bracketing shuffles once, on the
+    session key: the (session_id, _seg) windows reuse that clustering
+    and add only sorts. The T1 pin cuts the plan, so its range
+    shuffle is not in this plan."""
+    from rime_wanxiang_logger_spark.operators import rime
+    from rime_wanxiang_logger_spark.sources.readers import (
+        ingest_rime_jsonl,
+        rime_events_clean,
+    )
+
+    log = tmp_path / "rime.jsonl"
+    _write_rime_log(log, 300)
+    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    try:
+        clean = rime_events_clean(
+            ingest_rime_jsonl(spark, str(log), str(tmp_path / "bronze")))
+        df = rime.page_rank_replay(rime.session_ids(clean, "ts"), "ts")
+        plan = explain_str(df)
+        assert "Scan ExistingRDD" in plan, plan  # the T1 pin
+        assert "rangepartitioning" not in plan, plan
+        assert op_count(df, "Exchange") == 1, plan
+        assert "hashpartitioning(session_id" in plan, plan
+        assert (op_count(df, "Sort"), op_count(df, "Window")) == (3, 6), plan
+    finally:
+        spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 
 def test_q49_salted_join_not_broadcast(spark, sf_dir):

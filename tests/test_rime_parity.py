@@ -422,3 +422,144 @@ def test_page_rank_replay_matches_sequential_oracle(spark, data):
             )
         events.append(ev)
     assert _run_page_replay(spark, events) == lua_page_rank_replay(events)
+
+
+# ---------------------------------------------------------------------------
+# T1 bracketing shared inside a sharing() scope (rime._SESSIONS_MEMO)
+# ---------------------------------------------------------------------------
+
+SHARED_KINDS = ["session_start", "input_state_changed", "text_committed",
+                "input_state_changed", "session_end", "session_start",
+                "text_committed", "input_state_changed", "text_committed"] * 3
+
+
+def _shared_events():
+    events, rows = [], []
+    for i, kind in enumerate(SHARED_KINDS):
+        ev = {"event_type": kind, "ingest_id": i}
+        if kind == "input_state_changed":
+            ev["input_buffer"] = f"buf{i}"
+            ev["first_candidate"] = f"cand{i}"
+        events.append(ev)
+        rows.append((kind, f"txt{i}" if kind == "text_committed" else None,
+                     None, None, None, ev.get("input_buffer"), None,
+                     ev.get("first_candidate"), i))
+    return events, rows
+
+
+def python_session_ids(events):
+    """Sequential T1: the running count of session_start markers."""
+    n, out = 0, {}
+    for ev in events:
+        n += ev["event_type"] == "session_start"
+        out[ev["ingest_id"]] = n
+    return out
+
+
+def _job_count(spark, fn):
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"t1-shared-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _sessions(df):
+    return {r["ingest_id"]: r["session_id"] for r in df.collect()}
+
+
+def test_session_ids_shared_within_sharing_scope(spark):
+    """Inside sharing(), asof_replay's bracketing serves the next
+    session_ids call on the same frame: no Spark job, the same pinned
+    frame, recorded as aux:rime_sessions, and the rows of a raw call
+    and of the sequential oracle."""
+    from rime_wanxiang_logger_spark.operators import _stage_cache as sc
+
+    events, rows = _shared_events()
+    clean = _mk_events(spark, rows)
+    reads: list[str] = []
+    sc.clear()
+    try:
+        with sc.sharing(), sc.recording(reads):
+            replayed = asof_replay(clean, "ingest_id")
+            shared, jobs = _job_count(
+                spark, lambda: session_ids(clean, "ingest_id"))
+        assert jobs == 0
+        assert reads == ["aux:rime_sessions"]
+        raw = session_ids(clean, "ingest_id")
+        assert raw is not shared
+        assert _sessions(shared) == _sessions(raw) == python_session_ids(events)
+        got = {r["ingest_id"]: (r["replayed_buffer"], r["replayed_first"])
+               if r["replayed_buffer"] is not None else None
+               for r in replayed.collect()}
+        assert got == python_replay(events)
+    finally:
+        sc.clear()
+
+
+def test_session_ids_memo_keys_on_frame_object_and_order_col(spark):
+    """A different order column, or a different frame object over the
+    same rows (a re-read), brackets again; a raw call never reads the
+    memo."""
+    from pyspark.sql import functions as F
+
+    from rime_wanxiang_logger_spark.operators import _stage_cache as sc
+
+    events, rows = _shared_events()
+    clean = _mk_events(spark, rows).withColumn("ord", F.col("ingest_id") * 2)
+    sc.clear()
+    try:
+        with sc.sharing():
+            first = session_ids(clean, "ingest_id")
+            by_ord, jobs_ord = _job_count(
+                spark, lambda: session_ids(clean, "ord"))
+            reread = _mk_events(spark, rows).withColumn(
+                "ord", F.col("ingest_id") * 2)
+            again, jobs_frame = _job_count(
+                spark, lambda: session_ids(reread, "ingest_id"))
+            assert session_ids(clean, "ord") is by_ord
+        assert jobs_ord >= 1 and jobs_frame >= 1
+        assert by_ord is not first and again is not first
+        assert session_ids(clean, "ingest_id") is not first
+        want = python_session_ids(events)
+        assert _sessions(first) == _sessions(by_ord) == _sessions(again) == want
+    finally:
+        sc.clear()
+
+
+def test_session_ids_memo_cleared_and_weakly_keyed(spark):
+    """_stage_cache.clear() empties the memo, for any sf_dir filter;
+    and an entry dies with its input frame while the bracketed frame
+    lives on, so the value holds no reference to its key."""
+    import gc
+
+    from rime_wanxiang_logger_spark.operators import _stage_cache as sc
+    from rime_wanxiang_logger_spark.operators import rime
+
+    events, rows = _shared_events()
+    sc.clear()
+    try:
+        with sc.sharing():
+            session_ids(_mk_events(spark, rows), "ingest_id")
+            gc.collect()
+            assert len(rime._SESSIONS_MEMO) == 0
+
+            clean = _mk_events(spark, rows)
+            bracketed = session_ids(clean, "ingest_id")
+            assert len(rime._SESSIONS_MEMO) == 1
+            sc.clear("/no/such/dir")
+            assert len(rime._SESSIONS_MEMO) == 0
+
+            session_ids(clean, "ingest_id")
+            assert len(rime._SESSIONS_MEMO) == 1
+            del clean
+            gc.collect()
+            assert len(rime._SESSIONS_MEMO) == 0
+        assert _sessions(bracketed) == python_session_ids(events)
+    finally:
+        sc.clear()
