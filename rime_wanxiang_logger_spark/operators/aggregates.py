@@ -91,8 +91,6 @@ QUERIES = {
     "q20_rollup": q20_rollup,
 }
 
-_SCORE = f"CAST(1.0 AS DOUBLE) / ({RANK_SQL} + 1)"
-
 ORACLE = {
     "q07_accuracy_summary": f"""
         WITH c AS (

@@ -18,20 +18,16 @@ q51_frame_sample       binary payload → N sampled "frames" per item
                        chunked into fixed-size frames and every
                        SAMPLE_STRIDE-th frame is emitted with its
                        checksum)
+q87_image_resize       binary payload → aspect-preserving thumbnail dims
+q88_feature_extract    binary payload → FEAT_DIMS fake features, long form
 
-``image_resize`` / ``feature_extract`` are the production operators:
-capability-dispatched (``decoder/encoder="auto"`` → PIL when
-importable, the deterministic fake otherwise) with one shared batch
-shape, schema and checksum contract per operator, pinned by
-tests/test_multimodal_contract.py (PIL halves skip where it is
-absent). The REGISTERED q87/q88 pin the fake body because the
-testdata payloads are UTF-8 text and their DuckDB oracles replay the
-fake derivations — the dispatch is the seam, not the registered row.
+Each body derives only from the payload bytes, so every DuckDB oracle
+replays it exactly; a real pipeline swaps in an image decoder or a
+vision encoder with the same batch shape and output schema.
 """
 
 from __future__ import annotations
 
-import importlib.util
 from collections.abc import Iterator
 
 import pandas as pd
@@ -89,67 +85,6 @@ def make_fake_decode_batch():
             )
 
     return decode
-
-
-def has_pil() -> bool:
-    """Capability gate for the real decode bodies."""
-    return importlib.util.find_spec("PIL") is not None
-
-
-_RESIZE_SCHEMA = (
-    "doc_id bigint, src_w bigint, src_h bigint,"
-    " out_w bigint, out_h bigint, checksum string"
-)
-
-
-def make_pil_resize(box: int | None = None):
-    """REAL resize body for the q87 seam (capability-gated, r3 VERDICT
-    "Next round" #5): PIL decodes the payload as image bytes,
-    ``Image.thumbnail`` fits it into the box. Identical batch shape,
-    output schema (_RESIZE_SCHEMA) and checksum semantics as the fake
-    closure in q87_image_resize — the contract test
-    (tests/test_multimodal_contract.py) pins both bodies to the shared
-    contract and skips where PIL is absent (this container). The out
-    dims follow PIL's own aspect rounding (round-to-nearest per axis),
-    not the fake's floor — dims parity is with the REAL decoder's
-    semantics, which is the point of the seam.
-
-    Closure, like every Python-UDF entry point here (pickled by
-    value). The PIL import lives INSIDE the closure so shipping it to
-    executors only requires PIL there, not at plan-build time.
-    """
-
-    if box is None:
-        box = RESIZE_BOX  # defined below with the q87 fake
-
-    def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import hashlib as _hashlib
-        import io as _io
-
-        import pandas as _pd
-        from PIL import Image as _Image
-
-        for pdf in batches:
-            rows: dict[str, list] = {
-                k: []
-                for k in (
-                    "doc_id", "src_w", "src_h", "out_w", "out_h", "checksum",
-                )
-            }
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                img = _Image.open(_io.BytesIO(b))
-                w, h = img.size
-                img.thumbnail((box, box))
-                ow, oh = img.size
-                rows["doc_id"].append(doc_id)
-                rows["src_w"].append(w)
-                rows["src_h"].append(h)
-                rows["out_w"].append(ow)
-                rows["out_h"].append(oh)
-                rows["checksum"].append(_hashlib.md5(b).hexdigest())
-            yield _pd.DataFrame(rows)
-
-    return resize
 
 
 def binary_table(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -235,15 +170,18 @@ def q51_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 RESIZE_BOX = 32  # thumbnail bounding box (px)
 FEAT_DIMS = 8  # fake feature-vector width
 
+_RESIZE_SCHEMA = (
+    "doc_id bigint, src_w bigint, src_h bigint,"
+    " out_w bigint, out_h bigint, checksum string"
+)
 
-def make_fake_resize(box: int | None = None):
-    """FAKE resize body: byte-derived source dims (the shared fake
-    decode), aspect-preserving fit into a ``box`` square (scale capped
-    at 1.0, floors to ≥1 px — the exact float semantics the SQL oracle
-    replays), passthrough md5 checksum. Closure on purpose — see
-    make_fake_decode_batch."""
-    if box is None:
-        box = RESIZE_BOX
+
+def q87_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """FAKE resize: byte-derived source dims (the shared fake decode),
+    aspect-preserving fit into a RESIZE_BOX square (scale capped at
+    1.0, floors to ≥1 px — the exact float semantics the SQL oracle
+    replays), passthrough md5 checksum. The body is a closure on
+    purpose — see make_fake_decode_batch."""
 
     def resize(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib as _hashlib
@@ -257,7 +195,7 @@ def make_fake_resize(box: int | None = None):
             # first code point (== oracle's ascii()), not first byte
             h = payload.map(lambda b: ord(b.decode("utf-8")[0]) % 32 + 1)
             s = [
-                min(1.0, box / float(wi), box / float(hi))
+                min(1.0, RESIZE_BOX / float(wi), RESIZE_BOX / float(hi))
                 for wi, hi in zip(w, h)
             ]
             yield _pd.DataFrame(
@@ -279,63 +217,20 @@ def make_fake_resize(box: int | None = None):
                 }
             )
 
-    return resize
-
-
-def image_resize(
-    bt: DataFrame, box: int | None = None, decoder: str = "auto"
-) -> DataFrame:
-    """OPERATOR-level resize over a (doc_id, payload<binary>) table —
-    the capability-dispatched seam (r4 VERDICT "next round" #6):
-
-    - ``decoder="pil"``  — real decode + ``Image.thumbnail`` (PIL must
-      be importable on the executors; payloads must be image bytes)
-    - ``decoder="fake"`` — the deterministic byte-derived body (runs
-      anywhere, SQL-replayable)
-    - ``decoder="auto"`` — PIL when importable, fake otherwise
-
-    Both bodies share the batch shape, output schema (_RESIZE_SCHEMA)
-    and checksum semantics (contract-tested in
-    tests/test_multimodal_contract.py), so the dispatch never changes
-    the downstream plan or schema — only the decode bytes→dims step.
-    """
-    if decoder == "auto":
-        decoder = "pil" if has_pil() else "fake"
-    if decoder == "pil":
-        body = make_pil_resize(box)
-    elif decoder == "fake":
-        body = make_fake_resize(box)
-    else:  # pragma: no cover - caller bug
-        raise ValueError(f"unknown decoder {decoder!r}")
-    return fanout(
-        bt.select("doc_id", "payload").where(F.length("payload") > 0)
-    ).mapInPandas(body, schema=_RESIZE_SCHEMA)
-
-
-def q87_image_resize(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Resize plumbing through the ``image_resize`` operator, pinned to
-    ``decoder="fake"``: the registered corpus payloads are UTF-8 text
-    (no real media ships with the testdata) and the DuckDB oracle
-    replays the fake's byte-derived dims, so the registered row must
-    stay decoder-stable even on hosts where PIL exists. Production
-    callers on real image bytes use ``image_resize(bt)`` (auto) and get
-    PIL wherever it is importable — same schema, same checksum
-    passthrough, identical plan shape."""
-    return image_resize(
-        binary_table(spark, sf_dir), box=RESIZE_BOX, decoder="fake"
+    bt = binary_table(spark, sf_dir).select("doc_id", "payload")
+    return fanout(bt.where(F.length("payload") > 0)).mapInPandas(
+        resize, schema=_RESIZE_SCHEMA
     )
 
 
 _FEAT_SCHEMA = "doc_id bigint, dim int, feat double"
 
 
-def make_fake_features(dims: int | None = None):
-    """FAKE encoder body: feature f_i derives from
-    md5(payload ‖ '|' ‖ i), emitted LONG FORM (doc_id, dim, feat in
-    [0,1)) so every element is oracle-value-checked without array-type
-    stringification hazards. Closure on purpose."""
-    if dims is None:
-        dims = FEAT_DIMS
+def q88_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """FAKE encoder: feature f_i derives from md5(payload ‖ '|' ‖ i),
+    emitted LONG FORM (doc_id, dim, feat in [0,1)) so every element is
+    oracle-value-checked without array-type stringification hazards.
+    Closure on purpose."""
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         import hashlib as _hashlib
@@ -346,7 +241,7 @@ def make_fake_features(dims: int | None = None):
             out_doc, out_dim, out_feat = [], [], []
             for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
                 text = b.decode("utf-8")
-                for i in range(dims):
+                for i in range(FEAT_DIMS):
                     hx = _hashlib.md5(
                         f"{text}|{i}".encode("utf-8")
                     ).hexdigest()
@@ -359,74 +254,8 @@ def make_fake_features(dims: int | None = None):
                 {"doc_id": out_doc, "dim": out_dim, "feat": out_feat}
             )
 
-    return extract
-
-
-def make_pil_features(dims: int | None = None):
-    """REAL encoder body for the q88 seam: PIL decodes the payload,
-    features are the normalized ``dims``-bucket grayscale-intensity
-    histogram — a deterministic, library-only stand-in for a vision
-    encoder with the same LONG-FORM contract as the fake (dims rows
-    per doc, feat ∈ [0,1], contract-tested where PIL exists). Closure;
-    PIL imports inside it so only executors need the library."""
-    if dims is None:
-        dims = FEAT_DIMS
-
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import io as _io
-
-        import pandas as _pd
-        from PIL import Image as _Image
-
-        for pdf in batches:
-            out_doc, out_dim, out_feat = [], [], []
-            for doc_id, b in zip(pdf["doc_id"], pdf["payload"]):
-                px = list(_Image.open(_io.BytesIO(b)).convert("L").getdata())
-                n = max(1, len(px))
-                counts = [0] * dims
-                for v in px:
-                    counts[v * dims // 256] += 1
-                for i in range(dims):
-                    out_doc.append(doc_id)
-                    out_dim.append(i)
-                    out_feat.append(round(counts[i] / n, 9))
-            yield _pd.DataFrame(
-                {"doc_id": out_doc, "dim": out_dim, "feat": out_feat}
-            )
-
-    return extract
-
-
-def feature_extract(
-    bt: DataFrame, dims: int | None = None, encoder: str = "auto"
-) -> DataFrame:
-    """OPERATOR-level feature extraction over a (doc_id, payload)
-    table — same capability dispatch as ``image_resize``: ``"pil"``
-    runs the histogram encoder (real decode), ``"fake"`` the
-    md5-derived body, ``"auto"`` picks PIL when importable. Both share
-    _FEAT_SCHEMA and the dims-rows-per-doc shape."""
-    if encoder == "auto":
-        encoder = "pil" if has_pil() else "fake"
-    if encoder == "pil":
-        body = make_pil_features(dims)
-    elif encoder == "fake":
-        body = make_fake_features(dims)
-    else:  # pragma: no cover - caller bug
-        raise ValueError(f"unknown encoder {encoder!r}")
-    return fanout(bt.select("doc_id", "payload")).mapInPandas(
-        body, schema=_FEAT_SCHEMA
-    )
-
-
-def q88_feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Feature-extraction plumbing through the ``feature_extract``
-    operator, pinned to ``encoder="fake"`` for the same reason as q87:
-    the corpus payloads are text and the oracle replays the md5
-    derivation. Production callers on real media use
-    ``feature_extract(bt)`` (auto)."""
-    return feature_extract(
-        binary_table(spark, sf_dir), dims=FEAT_DIMS, encoder="fake"
-    )
+    bt = binary_table(spark, sf_dir).select("doc_id", "payload")
+    return fanout(bt).mapInPandas(extract, schema=_FEAT_SCHEMA)
 
 
 QUERIES = {

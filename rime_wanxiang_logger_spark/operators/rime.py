@@ -176,9 +176,6 @@ def _session_ids(events: DataFrame, order_col: str) -> DataFrame:
     )
 
 
-#: Menu-navigation keys and their page deltas (lua:314).
-NAV_DELTAS = {"Page_Down": 1, "Next": 1, "Page_Up": -1, "Prev": -1}
-
 #: Keys the producer latches as "this key selected the candidate"
 #: (lua:375-379: space, or a single digit 1-9, only while menu open).
 SELECT_KEYS = ("space", "1", "2", "3", "4", "5", "6", "7", "8", "9")

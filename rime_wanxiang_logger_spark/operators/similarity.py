@@ -208,9 +208,9 @@ NEARDUP_MARGIN_DEN = 2
 NEARDUP_SCORE_BLOCK = 1024
 
 
-def _need_bits_int(n: int, cap: int = NEARDUP_CAP) -> int:
+def _need_bits_int(n: int) -> int:
     """Split width for a bucket of ``n`` rows: smallest nb ≥ 0 with
-    margin·n ≤ cap·2^nb, in EXACT integer arithmetic.
+    margin·n ≤ NEARDUP_CAP·2^nb, in EXACT integer arithmetic.
 
     ADVICE r3: the former ``ceil(log2(1.5·n/cap))`` had to agree
     bit-for-bit with DuckDB's libm on every platform — a 1-ulp
@@ -220,9 +220,9 @@ def _need_bits_int(n: int, cap: int = NEARDUP_CAP) -> int:
     2^nb ≥ q). Mirrored in SQL as ``length(bin(q - 1))`` — DuckDB's
     bin() of x ≥ 1 is exactly x.bit_length() characters.
     """
-    if n <= cap:
+    if n <= NEARDUP_CAP:
         return 0
-    md_cap = NEARDUP_MARGIN_DEN * cap
+    md_cap = NEARDUP_MARGIN_DEN * NEARDUP_CAP
     q = (NEARDUP_MARGIN_NUM * n + md_cap - 1) // md_cap
     return (q - 1).bit_length()
 

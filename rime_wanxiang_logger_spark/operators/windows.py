@@ -109,15 +109,14 @@ def global_cumsum(
     order_cols,
     value,
     out_col: str,
-    num_partitions: int | None = None,
     cast: str | None = None,
 ) -> DataFrame:
     """Distributed running ``SUM(value)`` over a TOTAL order without a
     single-task WindowExec, as a two-phase prefix sum:
 
-    1. range-repartition on the sort keys into ``npart`` partitions
-       (ranges ascend with partition id) and take the running sum
-       within each partition;
+    1. range-repartition on the sort keys into ``npart`` =
+       ``spark.sql.shuffle.partitions`` partitions (ranges ascend with
+       partition id) and take the running sum within each partition;
     2. add to each row the sum of all lower partitions' totals.
 
     Invariants:
@@ -153,10 +152,7 @@ def global_cumsum(
       subset), never the raw fact table.
     """
     spark = df.sparkSession
-    npart = int(
-        num_partitions
-        or spark.conf.get("spark.sql.shuffle.partitions", "32")
-    )
+    npart = int(spark.conf.get("spark.sql.shuffle.partitions"))
     ranged = df.repartitionByRange(npart, *order_cols)
     local = (
         ranged.withColumn("_pid", F.spark_partition_id())
@@ -192,13 +188,10 @@ def global_row_number(
     df: DataFrame,
     order_cols,
     out_col: str = "row_num",
-    num_partitions: int | None = None,
 ) -> DataFrame:
     """Distributed global ``row_number`` = :func:`global_cumsum` of 1
     (exact equivalence under a total ordering)."""
-    return global_cumsum(
-        df, order_cols, F.lit(1), out_col, num_partitions, cast="int"
-    )
+    return global_cumsum(df, order_cols, F.lit(1), out_col, cast="int")
 
 
 SESSION_GAP_SECONDS = 1800

@@ -47,9 +47,6 @@ RIME_EVENT_SCHEMA = T.StructType(
 # global rank = page_index * PAGE_SIZE + local_index (lua:242, 250).
 PAGE_SIZE = 6
 
-# Candidate-list capture truncation (lua:188, 202-211).
-CANDIDATE_DISPLAY_LIMIT = 5
-
 # --- B. Driver star-schema tables (TESTDATA.md) ----------------------------
 
 STAR_TABLES = (

@@ -126,10 +126,6 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {t: load_table(spark, sf_dir, t) for t in STAR_TABLES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every star table as a temp view for the SQL API."""
     for t in STAR_TABLES:
@@ -231,7 +227,7 @@ def ingest_rime_jsonl_observed(
     return bronze, obs
 
 
-def fanout(df: DataFrame, parts: int | None = None) -> DataFrame:
+def fanout(df: DataFrame) -> DataFrame:
     """Round-robin repartition a *small* input before compute-heavy
     operators (cross joins, per-row hashing, HOF folds, Pandas UDFs).
 
@@ -257,7 +253,7 @@ def fanout(df: DataFrame, parts: int | None = None) -> DataFrame:
     batch helpers that call fanout (e.g. dedup._signatures) be reused
     verbatim on streams instead of maintaining drift-prone copies.
     """
-    n = parts or int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    n = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     if df.isStreaming:
         return df.repartition(n)
     if df.rdd.getNumPartitions() >= n:

@@ -732,35 +732,23 @@ def stream_to_parquet_foreachbatch(
 #: any SF — which is also the documented production posture (module
 #: doc). Parity across providers is pinned by tests (hourly rollup +
 #: the attribution join drain both hash-match under either provider).
+#: The bound is paid for at small scale: at sf1 (4 cores, 5 alternating
+#: in-session reps, identical drained rows) the seven-drain sum read
+#: 41.1 s median under RocksDB and 37.4 s under the HDFS provider
+#: (faster in 5/5 reps; q106 6.35 → 2.86 s).
 _ROCKSDB_PROVIDER = (
     "org.apache.spark.sql.execution.streaming.state."
     "RocksDBStateStoreProvider"
 )
 _PROVIDER_CONF = "spark.sql.streaming.stateStore.providerClass"
 
-#: Changelog checkpointing for the RocksDB stores (r14, measured
-#: per-drain). Default (false) uploads a FULL RocksDB snapshot per
-#: store per commit — one store instance per shuffle partition per
-#: stateful operator, a pure fixed cost per micro-batch. Changelog
-#: mode appends only the batch's state DELTA at commit and leaves
-#: snapshot consolidation to the background maintenance thread — the
-#: documented low-commit-latency RocksDB posture, and the right one at
-#: ANY state size (the delta is bounded by the batch's writes, never
-#: the standing state). Measured at sf0.1
-#: (best-of-2 per drain): q92 3.41→2.35, q110 2.77→2.17, q106
-#: 3.21→2.72, q100 1.43→1.14, q121 4.06→3.73, q107 2.09→1.99 — ~3 s
-#: across the seven drains, identical drained results.
-_CHANGELOG_CONF = (
-    "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
-)
-
-#: No-data micro-batches off (r15, measured — the single largest
-#: remaining drain fixed cost). An availableNow drain of a WATERMARKED
+#: No-data micro-batches off. An availableNow drain of a WATERMARKED
 #: query runs one extra no-data micro-batch after the last data batch
 #: purely to advance the watermark and evict state that is about to die
-#: with the query anyway: per-batch progress from a
-#: StreamingQueryListener showed q92/q106/q121 each paying a 0.5–0.9 s
-#: batch 1 with numInputRows=0.
+#: with the query anyway. Measured at sf1 (same runs as the provider):
+#: with no-data batches on, the seven-drain sum read 45.8 s median
+#: against 41.1 s, and q106 paid 8.94 s against 6.35 s (slower in 5/5
+#: reps); at sf0.1 the sum read 22.48 s against 19.62 s.
 #: Every drained RESULT is identical by construction: the update-mode
 #: aggregates (q92/q121) emit each verdict in the batch that delivered
 #: the doc, the inner stream-stream join (q106) emits on match, and the
@@ -771,31 +759,15 @@ _CHANGELOG_CONF = (
 #: a bounded backfill drain has no quiet period to bridge.
 _NODATA_CONF = "spark.sql.streaming.noDataMicroBatches.enabled"
 
-#: RocksDB row tracking off (r15): with tracking on, every state-store
-#: put/delete pays a point lookup first just to maintain the
-#: numTotalStateRows METRIC — a read-amplification tax on the write
-#: path, linear in the batch's state writes at any scale. Documented
-#: RocksDB state-store tuning knob; results are unaffected (the metric
-#: reads -1). Measured together with _NODATA_CONF: the seven drains'
-#: same-session best-of-2 sum fell 12.76 → 10.57 s (q92 2.33→1.80, q106
-#: 2.67→1.93, q121 2.61→1.87); trackrows alone 12.76 → 12.29.
-_TRACKROWS_CONF = (
-    "spark.sql.streaming.stateStore.rocksdb.trackTotalNumberOfRows"
-)
-
-#: (conf key, pinned value, default-when-unset) — every drain conf in
-#: one place so the scope and its pin/restore test cannot drift apart.
-#: The explicit fallbacks are for confs that, unlike providerClass, have
-#: no retrievable default on a vanilla session (conf.get throws; passing
-#: None would later restore a null — measured: IllegalArgumentException
-#: on exit in a vanilla session). The shuffle width is deliberately not
-#: here: drains run at the session's width, the deployment setting every
+#: (conf key, pinned value) — every drain conf in one place so the
+#: scope and its pin/restore test cannot drift apart. Both are
+#: registered Spark confs, so a vanilla session reads their defaults
+#: back for the restore. The shuffle width is deliberately not here:
+#: drains run at the session's width, the deployment setting every
 #: batch plan uses, and drained results do not depend on it.
-_DRAIN_CONFS: tuple[tuple[str, str, str | None], ...] = (
-    (_PROVIDER_CONF, _ROCKSDB_PROVIDER, None),
-    (_CHANGELOG_CONF, "true", "false"),
-    (_NODATA_CONF, "false", "true"),
-    (_TRACKROWS_CONF, "false", "true"),
+_DRAIN_CONFS: tuple[tuple[str, str], ...] = (
+    (_PROVIDER_CONF, _ROCKSDB_PROVIDER),
+    (_NODATA_CONF, "false"),
 )
 
 
@@ -805,11 +777,8 @@ def _drain_scope(spark: SparkSession):
     them afterwards, also when the run raises (the rest of a session
     keeps the default provider and production no-data-batch
     semantics)."""
-    old = {
-        key: spark.conf.get(key) if default is None else spark.conf.get(key, default)
-        for key, _, default in _DRAIN_CONFS
-    }
-    for key, value, _ in _DRAIN_CONFS:
+    old = {key: spark.conf.get(key) for key, _ in _DRAIN_CONFS}
+    for key, value in _DRAIN_CONFS:
         spark.conf.set(key, value)
     try:
         yield

@@ -14,18 +14,24 @@ mask the closure-pickling rule every mapInPandas entry point follows.
       python scripts/verify_oracle.py              # other scales;
                                                    # rows-only names
 
+Each result is compared with ``tests/oracle_utils.assert_frames_match``,
+the comparator Tier-1's oracle-parity suite uses: same columns, same
+row count, exactly equal values after sorting.
+
 Exit 0 iff every compared query matches exactly."""
-import json
 import os
 import sys
 import time
 
 os.chdir("/tmp")
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
+sys.path.insert(0, os.path.join(REPO, "tests"))
 
 import duckdb
-import pandas as pd
 from pyspark.sql import SparkSession
+
+from oracle_utils import assert_frames_match
 
 SF_DIR = os.environ.get("DRIVE_SF_DIR", "/root/testdata/sf0.01")
 TABLES = [
@@ -75,34 +81,9 @@ for i, (name, fn) in enumerate(queries.items()):
         if name not in oracles:
             print(f"[{i:3d}] {name}: rows-only {len(sdf)} (no oracle)")
             continue
-        odf = con.execute(oracles[name]).fetchdf()
-        sdf = sdf.reindex(sorted(sdf.columns), axis=1)
-        odf = odf.reindex(sorted(odf.columns), axis=1)
-        if list(sdf.columns) != list(odf.columns):
-            fail.append((name, f"cols {list(sdf.columns)} vs {list(odf.columns)}"))
-            print(f"[{i:3d}] {name}: COLS MISMATCH")
-            continue
-        sdf = sdf.sort_values(by=list(sdf.columns)).reset_index(drop=True)
-        odf = odf.sort_values(by=list(odf.columns)).reset_index(drop=True)
-        for c in sdf.columns:  # normalize dtypes for compare
-            if odf[c].dtype != sdf[c].dtype:
-                try:
-                    odf[c] = odf[c].astype(sdf[c].dtype)
-                except (TypeError, ValueError):
-                    sdf[c] = sdf[c].astype(str)
-                    odf[c] = odf[c].astype(str)
-        if len(sdf) != len(odf):
-            fail.append((name, f"rows {len(sdf)} vs {len(odf)}"))
-            print(f"[{i:3d}] {name}: ROWS {len(sdf)} vs {len(odf)}")
-            continue
-        eq = sdf.equals(odf)
-        if not eq:
-            neq = (sdf != odf) & ~(sdf.isna() & odf.isna())
-            fail.append((name, f"values differ in {neq.any().to_dict()}"))
-            print(f"[{i:3d}] {name}: VALUES DIFFER")
-        else:
-            print(f"[{i:3d}] {name}: OK ({len(sdf)} rows)")
-    except Exception as ex:  # noqa: BLE001
+        assert_frames_match(sdf, con.execute(oracles[name]).fetchdf(), name)
+        print(f"[{i:3d}] {name}: OK ({len(sdf)} rows)")
+    except Exception as ex:  # noqa: BLE001 - a mismatch is an AssertionError
         fail.append((name, repr(ex)[:300]))
         print(f"[{i:3d}] {name}: ERROR {repr(ex)[:200]}")
 print(f"\n{time.time()-t0:.1f}s; failures: {len(fail)}")

@@ -1,136 +1,23 @@
-"""Contract tests for the multimodal decode seam (SURVEY §2 M8).
+"""Contract tests for the multimodal operators (SURVEY §2 M8).
 
-The container ships no image libraries, so the registered q87 runs a
-deterministic fake body; ``make_pil_resize`` is the production drop-in.
-These tests pin the CONTRACT between the two bodies — identical output
-columns, checksum-passthrough semantics, box-fit guarantees — so the
-swap is mechanical wherever PIL exists, and they SKIP (not pass
-vacuously) where it doesn't. Plus the ASCII-corpus invariant the
-byte-vs-codepoint oracles rely on (ADVICE r3): if the driver ever
-ships non-ASCII documents, these fail loudly instead of surfacing as
-an opaque oracle hash mismatch.
+The registered q87 emits a fixed column contract that a real image
+decoder must keep, and the byte-vs-codepoint oracles rely on the
+corpus being ASCII (ADVICE r3): if the driver ever ships non-ASCII
+documents, these fail loudly instead of surfacing as an opaque oracle
+hash mismatch.
 """
 
 from __future__ import annotations
 
-import hashlib
-
-import pandas as pd
-import pytest
-
-from rime_wanxiang_logger_spark.operators.multimodal import (
-    FEAT_DIMS,
-    RESIZE_BOX,
-    binary_table,
-    feature_extract,
-    has_pil,
-    image_resize,
-    make_pil_features,
-    make_pil_resize,
-    q87_image_resize,
-    q88_feature_extract,
-)
+from rime_wanxiang_logger_spark.operators.multimodal import q87_image_resize
 
 RESIZE_COLS = ["doc_id", "src_w", "src_h", "out_w", "out_h", "checksum"]
 
 
-def _run_closure(fn, pdf: pd.DataFrame) -> pd.DataFrame:
-    out = pd.concat(list(fn(iter([pdf]))), ignore_index=True)
-    return out
-
-
-def test_pil_resize_contract_matches_fake_schema():
-    """Real body (PIL decode + thumbnail) must emit exactly the fake
-    body's columns with the same checksum semantics and box-fit
-    bounds. Skips where PIL is absent — the capability gate, not a
-    vacuous pass."""
-    PIL = pytest.importorskip("PIL")
-    import io
-
-    from PIL import Image
-
-    imgs = []
-    for i, (w, h) in enumerate([(100, 40), (7, 3), (32, 32), (640, 480)]):
-        buf = io.BytesIO()
-        Image.new("L", (w, h), color=i * 40).save(buf, format="PNG")
-        imgs.append((i, buf.getvalue(), w, h))
-    pdf = pd.DataFrame(
-        {
-            "doc_id": [i for i, *_ in imgs],
-            "payload": [b for _, b, *_ in imgs],
-        }
-    )
-    out = _run_closure(make_pil_resize(), pdf)
-    assert list(out.columns) == RESIZE_COLS
-    for (_, b, w, h), row in zip(imgs, out.itertuples(index=False)):
-        assert (row.src_w, row.src_h) == (w, h)
-        assert row.checksum == hashlib.md5(b).hexdigest()
-        assert 1 <= row.out_w <= RESIZE_BOX
-        assert 1 <= row.out_h <= RESIZE_BOX
-        # PIL only downscales via thumbnail; aspect preserved to
-        # PIL's own per-axis rounding
-        if w <= RESIZE_BOX and h <= RESIZE_BOX:
-            assert (row.out_w, row.out_h) == (w, h)
-
-
 def test_fake_resize_same_columns_as_real(spark, sf_dir):
-    """The registered fake q87 must emit the same column contract the
-    real body is pinned to above — so the swap never changes the
-    downstream schema. Runs everywhere (no PIL needed)."""
+    """q87 emits the resize column contract, in order, so swapping in
+    a real decoder body never changes the downstream schema."""
     assert q87_image_resize(spark, sf_dir).columns == RESIZE_COLS
-
-
-def test_image_resize_auto_dispatch(spark, sf_dir):
-    """``image_resize(decoder="auto")`` must resolve to the body the
-    capability gate picks: where PIL is absent (this container) it is
-    value-identical to the fake path the registered q87 pins; where
-    PIL exists the auto path is the PIL body, exercised on real PNG
-    payloads in the test above and via Spark below."""
-    bt = binary_table(spark, sf_dir)
-    if not has_pil():
-        auto = image_resize(bt, decoder="auto")
-        assert sorted(map(tuple, auto.collect())) == sorted(
-            map(tuple, q87_image_resize(spark, sf_dir).collect())
-        )
-    else:  # pragma: no cover - container has no PIL
-        import io
-
-        from PIL import Image
-
-        buf = io.BytesIO()
-        Image.new("L", (100, 40)).save(buf, format="PNG")
-        png = spark.createDataFrame(
-            [(1, bytearray(buf.getvalue()))], "doc_id long, payload binary"
-        )
-        row = image_resize(png, decoder="auto").collect()[0]
-        assert (row.src_w, row.src_h) == (100, 40)
-        assert max(row.out_w, row.out_h) <= RESIZE_BOX
-
-
-def test_feature_extract_auto_dispatch(spark, sf_dir):
-    """Same dispatch contract for the encoder seam: fake where PIL is
-    absent (== the registered q88), PIL histogram features where it
-    exists (dims rows per doc, each in [0, 1], summing to ~1)."""
-    bt = binary_table(spark, sf_dir)
-    if not has_pil():
-        auto = feature_extract(bt, encoder="auto")
-        assert sorted(map(tuple, auto.collect())) == sorted(
-            map(tuple, q88_feature_extract(spark, sf_dir).collect())
-        )
-    else:  # pragma: no cover - container has no PIL
-        import io
-
-        from PIL import Image
-
-        buf = io.BytesIO()
-        Image.new("L", (16, 16), color=200).save(buf, format="PNG")
-        out = _run_closure(
-            make_pil_features(FEAT_DIMS),
-            pd.DataFrame({"doc_id": [1], "payload": [buf.getvalue()]}),
-        )
-        assert len(out) == FEAT_DIMS
-        assert all(0.0 <= f <= 1.0 for f in out["feat"])
-        assert abs(out["feat"].sum() - 1.0) < 1e-6
 
 
 def test_documents_corpus_is_ascii(spark, sf_dir):

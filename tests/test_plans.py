@@ -213,6 +213,27 @@ def test_session_conf_jit_compilable_codegen(spark):
     assert spark.conf.get("spark.sql.codegen.hugeMethodLimit") == "8000"
 
 
+def test_engine_confs_differ_from_spark_defaults(spark):
+    """Every conf ``get_spark`` or ``ensure_session_conf`` sets must
+    change something: a value equal to the default Spark registers for
+    that key is a setting no run depends on, and it may not come back.
+    Defaults are read from the JVM's conf registry, so they track the
+    Spark version the engine runs on."""
+    from rime_wanxiang_logger_spark.session import _RUNTIME_CONF, _builder_conf
+
+    jvm = spark.sparkContext._jvm
+    find = jvm.org.apache.spark.internal.config.ConfigEntry.findEntry
+    for key, value in {**_builder_conf(4), **_RUNTIME_CONF}.items():
+        entry = find(key)
+        assert entry is not None, f"{key} is not a registered Spark conf"
+        # a fallback entry defaults to another conf's value
+        while entry.getClass().getSimpleName() == "FallbackConfigEntry":
+            entry = entry.fallback()
+        assert value != entry.defaultValueString(), (
+            f"{key}={value} is Spark's default"
+        )
+
+
 def _write_rime_log(path, n: int) -> None:
     """A seeded Rime log of key events and commits, one session per 50
     lines, with a truncated line every 97th."""
@@ -1372,20 +1393,24 @@ def test_global_cumsum_matches_python_running_sum(spark, aqe, case):
     else:
         value = (F.col("tie") % 7) - 2
     df = df.withColumn("v", value)
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
+    prev = {
+        k: spark.conf.get(k)
+        for k in ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    }
     spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    spark.conf.set("spark.sql.shuffle.partitions", str(npart))
     try:
         out = global_cumsum(
             df,
             [F.asc("k"), F.asc("tie")],
             F.col("v"),
             "cs",
-            num_partitions=npart,
             cast="int" if case == "int_cast" else None,
         )
         rows = out.collect()
     finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
+        for k, v in prev.items():
+            spark.conf.set(k, v)
     expect_type = {"sparse": "bigint", "double": "double", "int_cast": "int"}[case]
     assert dict(out.dtypes)["cs"] == expect_type
     rows.sort(key=lambda r: (r["k"], r["tie"]))

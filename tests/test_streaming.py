@@ -855,62 +855,84 @@ def test_decontaminate_stream_parity(spark, tmp_path):
 
 
 def _drain_confs(spark):
-    from rime_wanxiang_logger_spark.streaming.twin import (
-        _CHANGELOG_CONF,
-        _NODATA_CONF,
-        _PROVIDER_CONF,
-        _TRACKROWS_CONF,
-    )
+    from rime_wanxiang_logger_spark.streaming.twin import _DRAIN_CONFS
 
-    width_key = "spark.sql.shuffle.partitions"
-    return {
-        width_key: spark.conf.get(width_key),
-        _PROVIDER_CONF: spark.conf.get(_PROVIDER_CONF),
-        _CHANGELOG_CONF: spark.conf.get(_CHANGELOG_CONF, "false"),
-        _NODATA_CONF: spark.conf.get(_NODATA_CONF, "true"),
-        _TRACKROWS_CONF: spark.conf.get(_TRACKROWS_CONF, "true"),
-    }
+    keys = ["spark.sql.shuffle.partitions"] + [k for k, _ in _DRAIN_CONFS]
+    return {k: spark.conf.get(k) for k in keys}
 
 
 def test_stream_state_width_scope_pins_and_restores_conf(spark):
-    """The drain scope (twin._drain_scope) must pin all four streaming
-    confs — RocksDB provider, changelog checkpointing (r14: the
-    measured ~3 s/bench commit-path win), no-data-batch suppression and
-    row-tracking off (r15: the measured 12.76 → 10.57 s drain-sum win;
-    a silent revert would only resurface as drain-wall drift) — and
-    restore every one of them on exit, so the rest of a session keeps
-    the default provider and production no-data-batch semantics. It
-    sets no width: drains run at the session's shuffle width."""
+    """The drain scope (twin._drain_scope) must pin both streaming
+    confs — the RocksDB provider and no-data-batch suppression (the
+    measured drain-sum win; a silent revert would only resurface as
+    drain-wall drift) — and restore both on exit, so the rest of a
+    session keeps the default provider and production no-data-batch
+    semantics. It sets no width: drains run at the session's shuffle
+    width."""
     from rime_wanxiang_logger_spark.streaming.twin import (
-        _CHANGELOG_CONF,
         _DRAIN_CONFS,
         _NODATA_CONF,
         _PROVIDER_CONF,
         _ROCKSDB_PROVIDER,
-        _TRACKROWS_CONF,
         _drain_scope,
     )
 
     width_key = "spark.sql.shuffle.partitions"
-    assert {k for k, _, _ in _DRAIN_CONFS} == {
-        _PROVIDER_CONF, _CHANGELOG_CONF, _NODATA_CONF, _TRACKROWS_CONF,
-    }
+    assert {k for k, _ in _DRAIN_CONFS} == {_PROVIDER_CONF, _NODATA_CONF}
     before = _drain_confs(spark)
     with _drain_scope(spark):
         assert spark.conf.get(width_key) == before[width_key]
         assert spark.conf.get(_PROVIDER_CONF) == _ROCKSDB_PROVIDER
-        assert spark.conf.get(_CHANGELOG_CONF) == "true"
         assert spark.conf.get(_NODATA_CONF) == "false"
-        assert spark.conf.get(_TRACKROWS_CONF) == "false"
     for k, v in before.items():
         assert spark.conf.get(k, "sentinel-unset") == v, k
+
+
+def test_drain_state_reports_its_row_count(spark):
+    """A stateful drain's progress reports a positive ``numRowsTotal``:
+    the drains leave RocksDB's row tracking at its default (on), and
+    scripts/scale_proof.py records this total as the state-rows ladder
+    its linearity gate reads."""
+    import time
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class _RowTotals(StreamingQueryListener):
+        def __init__(self):
+            self.totals = []
+
+        def onQueryStarted(self, event):  # noqa: N802
+            pass
+
+        def onQueryProgress(self, event):  # noqa: N802
+            ops = json.loads(event.progress.json).get("stateOperators") or []
+            self.totals.append(sum(o.get("numRowsTotal", 0) for o in ops))
+
+        def onQueryIdle(self, event):  # noqa: N802
+            pass
+
+        def onQueryTerminated(self, event):  # noqa: N802
+            pass
+
+    listener = _RowTotals()
+    spark.streams.addListener(listener)
+    try:
+        ev = st.read_table_stream(spark, SMALL_SF, "events")
+        rolled = ev.groupBy("event_type").agg(F.count(F.lit(1)).alias("n"))
+        assert st.drain(rolled, "row_totals", "complete").count() > 0
+        deadline = time.monotonic() + 10
+        while not listener.totals and time.monotonic() < deadline:
+            time.sleep(0.1)
+    finally:
+        spark.streams.removeListener(listener)
+    assert listener.totals and max(listener.totals) > 0, listener.totals
 
 
 def test_failing_drain_reraises_stops_and_restores_conf(spark, tmp_path):
     """A drain whose stream fails (the sequence-guard setup of
     test_stateful_asof_sequence_guard_fires) must re-raise the stream's
-    error, leave no active stream behind, restore all four drain confs
-    and leave the session's shuffle width as it was."""
+    error, leave no active stream behind, restore both drain confs and
+    leave the session's shuffle width as it was."""
     from pyspark.errors.exceptions.captured import StreamingQueryException
 
     stage = _stage_events_split(spark, tmp_path, reverse_mtime=True)
